@@ -73,16 +73,13 @@ object Explain {
     val kpPred = kps.groupBy(_._1).map { case (b, ps) =>
       col("band") === b && col("kp").isin((ps.map(_._2).toSeq :+ -1): _*)
     }.reduce(_ || _)
-    val old = spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold", "10")
-    spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
-      (keys.length + 1).toString)
-    try {
+    GraftConfig.scopedConf(spark,
+        "spark.sql.parquet.pushdown.inFilterThreshold" -> (keys.length + 1).toString) {
       val scan = spark.read.parquet(store)
         .filter(col("batch") =!= 2L).filter(kpPred)
         .filter(col("key").isin(keys.toSeq: _*))
       scan.queryExecution.executedPlan // force planning
       scan.explain("formatted")
-    } finally spark.conf.set(
-      "spark.sql.parquet.pushdown.inFilterThreshold", old)
+    }
   }
 }

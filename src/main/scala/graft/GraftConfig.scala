@@ -62,6 +62,32 @@ object GraftConfig {
       sys.props.getOrElse("graft.store.root",
         s"${sys.props.getOrElse("user.dir", ".")}/spark-warehouse/graft-stores"))
 
+  /** Run `body` with session conf `kvs` set on `spark`, then restore each
+    * key's previous value (unset if it had none). The ONE place the
+    * engine toggles session conf; it mutates exactly the session passed,
+    * so callers pick the scope by picking the session:
+    *  - the micro-batch paths (the tiny-batch AQE bypass in
+    *    `Dedup.screenBatchCore` and `RpForest.appendBatch`,
+    *    `inFilterThreshold` in `Dedup.screenBatch` and the Hamming probe
+    *    core) pass `batch.sparkSession` — inside `foreachBatch` that is
+    *    the stream's own cloned session, never the one concurrent
+    *    queries run on; called directly, it is the caller's session;
+    *  - `SparkEntryStreaming.withStateParts` and the q225 state-store
+    *    provider set the SHARED gate session around `start()` (a stream
+    *    clones the session, and with it these values, when it starts);
+    *  - `Explain`'s probe-plan printer sets its own driver session.
+    * Not safe for two threads toggling the same key on one session. */
+  def scopedConf[T](spark: org.apache.spark.sql.SparkSession,
+                    kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Parse a config JSON string; absent fields fall back to defaults
     * (the reference's deep-update-over-current behavior for a fresh
     * base). Malformed JSON → defaults. */

@@ -22,11 +22,8 @@ private[graft] trait SparkEntryStreaming { this: SparkEntry.type =>
     * is pure per-store overhead (q222 measured 11.0 -> 6.1 s at 8). A
     * production stream sizes this once to its key cardinality - the
     * same knob, a deliberate setting instead of a default. */
-  private[graft] def withStateParts[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[graft] def withStateParts[T](s: SparkSession, n: Int)(body: => T): T =
+    GraftConfig.scopedConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** SHARED staged µs-events copy for the streaming gates, written ONCE
     * per dataset fingerprint under [[GraftConfig.storeRoot]] (the r13
@@ -363,11 +360,8 @@ private[graft] trait SparkEntryStreaming { this: SparkEntry.type =>
     val qname = "q225_tws_sessions"
     s.sql(s"DROP TABLE IF EXISTS $qname")
     import s.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.get(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftConfig.scopedConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val out = EventStream.sessionStatsTws(
         EventStream.readEvents(s, shared)
           .unionByName(EventStream.readEvents(s, sent))
@@ -383,7 +377,7 @@ private[graft] trait SparkEntryStreaming { this: SparkEntry.type =>
           .coalesce(1).write.mode("append").parquet(sent)
         q.processAllAvailable()
       } finally { q.stop(); rmTree(stage) }
-    } finally s.conf.set(providerKey, prevProvider)
+    }
     s.table(qname)
       .filter(col("user_id") >= 0)
       .select(col("user_id"),

@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.GraftConfig
 import graft.functions.GraftFunctions
+import graft.streaming.BatchStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1302,7 +1304,8 @@ object Dedup {
 
   /** Compact a [[screenedIngest]] signature store: fold every
     * `batch=<id>` dir (seed included) into ONE bucketed, sig-sorted
-    * dataset at `batch=-1`, re-applying the bucket cap GLOBALLY — this
+    * dataset at the next negative generation (the [[BatchStore]]
+    * compaction), re-applying the bucket cap GLOBALLY — this
     * is where per-key drift dies (a key hot across many small batches
     * exceeds `storeCap` in aggregate even though each batch respected
     * it; the global window re-caps it once, and the over-cap members it
@@ -1332,40 +1335,44 @@ object Dedup {
     * settings. In-file `sortBy(sig)` gives the intra-bucket skip that
     * single-column bucket pruning would otherwise have provided.
     *
-    * NOT concurrency-safe with a live stream (stop → compact → restart;
-    * this job deletes the per-batch dirs it absorbs). Returns the
+    * NOT concurrency-safe with a live screen stream (stop → compact →
+    * restart): a screen between the rename and the delete sees absorbed
+    * signatures twice, which inflates its n_bands counts. Returns the
     * registered table name. */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
                             storePath: String,
                             buckets: Int = DefaultStoreBuckets,
                             storeCap: Int = DefaultMaxBucketSize): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    val seen = fs.globStatus(new org.apache.hadoop.fs.Path(s"$storePath/batch=*"))
-    require(seen != null && seen.nonEmpty, s"no signature store at $storePath")
     val tbl = signatureStoreTable(storePath)
-    val tmpTbl = tbl + "_compacting"
-    val tmpPath = new org.apache.hadoop.fs.Path(storePath + "__compact_tmp")
-    fs.delete(tmpPath, true)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-    // Global re-cap, one file per bucket: repartitioning on (band, sig)
-    // with the bucket count uses the same hash+modulus as the bucket
-    // spec, so each write task owns exactly one bucket id and the
-    // sorted-within-file property holds for row-group skip.
-    capBuckets(spark.read.parquet(storePath).select("id", "band", "sig"), storeCap)
-      .repartition(buckets, col("band"), col("sig"))
-      .write.bucketBy(buckets, "band", "sig").sortBy("sig")
-      .option("path", tmpPath.toString).saveAsTable(tmpTbl)
-    spark.sql(s"DROP TABLE $tmpTbl") // external: drops metadata, files stay
-    seen.foreach(s => fs.delete(s.getPath, true))
-    fs.rename(tmpPath, new org.apache.hadoop.fs.Path(s"$storePath/batch=-1"))
+    val done = BatchStore.compact(spark, storePath,
+      signatureFold(spark, storePath, buckets, storeCap))
+    require(done.nonEmpty, s"no signature store at $storePath")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(
       s"""CREATE TABLE $tbl (id BIGINT, band INT, sig STRING)
          |USING PARQUET
          |CLUSTERED BY (band, sig) SORTED BY (sig) INTO $buckets BUCKETS
-         |LOCATION '$storePath/batch=-1'""".stripMargin)
+         |LOCATION '${done.get.genDir}'""".stripMargin)
     tbl
+  }
+
+  /** [[compactSignatureStore]]'s layout: globally re-capped, one file per
+    * bucket — repartitioning on (band, sig) with the bucket count uses
+    * the same hash+modulus as the bucket spec, so each write task owns
+    * exactly one bucket id and the sorted-within-file property holds for
+    * row-group skip. */
+  private[graft] def signatureFold(spark: org.apache.spark.sql.SparkSession,
+                                   storePath: String, buckets: Int,
+                                   storeCap: Int): BatchStore.Fold = {
+    val tmpTbl = signatureStoreTable(storePath) + "_compacting"
+    BatchStore.Fold { (rows, stage) =>
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
+      capBuckets(rows.select("id", "band", "sig"), storeCap)
+        .repartition(buckets, col("band"), col("sig"))
+        .write.bucketBy(buckets, "band", "sig").sortBy("sig")
+        .option("path", stage).saveAsTable(tmpTbl)
+      spark.sql(s"DROP TABLE $tmpTbl") // external: drops metadata, files stay
+    }
   }
 
   /** [[screenAgainst]] a batch against a [[compactSignatureStore]]d
@@ -1482,12 +1489,9 @@ object Dedup {
     * micro-batch's flags ≡ a batch `screenAgainst` of that batch against
     * the store as of the previous batch).
     *
-    * Store layout contract: `storePath/batch=<id>/band=<b>/…` — one
-    * subdirectory per micro-batch, each written with OVERWRITE. foreachBatch
-    * is at-least-once (a crashed batch re-runs with the same id), so
-    * per-batch-id overwrite makes store growth idempotent: a retry
-    * rewrites the same files instead of appending duplicate signatures.
-    * Flagged pairs land the same way under `flaggedPath/batch=<id>`.
+    * Store layout: a [[BatchStore]] (`storePath/batch=<id>/…`; its
+    * scaladoc has the retry and compaction contract). Flagged pairs land
+    * the same way under `flaggedPath/batch=<id>`.
     * Seed a pre-existing corpus by writing its signatures to
     * `storePath/batch=-1` via [[saveSignatures]] and start the stream
     * (micro-batch ids start at 0 — the seed must not collide); an
@@ -1509,18 +1513,12 @@ object Dedup {
                      storeCap: Int = DefaultMaxBucketSize,
                      pruneStoredBySig: Boolean = false,
                      statsPath: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(newDocs.isStreaming, "screenedIngest expects a streaming DataFrame")
-    newDocs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        screenBatch(batch.toDF(), batchId, storePath, flaggedPath, textCol,
-          idCol, n, bands, minBands, maxBucketSize, storeCap,
-          pruneStoredBySig, statsPath)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(newDocs, checkpointPath, "screenedIngest") {
+      (batch, batchId) => screenBatch(batch, batchId, storePath, flaggedPath,
+        textCol, idCol, n, bands, minBands, maxBucketSize, storeCap,
+        pruneStoredBySig, statsPath)
+    }
 
   /** One micro-batch of [[screenedIngest]], extracted so retry semantics
     * are testable without forcing a real foreachBatch crash: screen the
@@ -1545,16 +1543,10 @@ object Dedup {
                                  pruneStoredBySig: Boolean = false,
                                  statsPath: String = ""): Unit = {
     val spark = batch.sparkSession
+    if (BatchStore.absorbed(spark, storePath, batchId)) return
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(storePath),
-        spark.sparkContext.hadoopConfiguration)
-      val seen = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$storePath/batch=*"))
-      val prior =
-        if (seen == null) Array.empty[org.apache.hadoop.fs.FileStatus]
-        else seen.filterNot(_.getPath.getName == s"batch=$batchId")
+      val prior = BatchStore.prior(spark, storePath, batchId)
       // Screen BEFORE this batch's signatures join the store: a doc is
       // flagged against prior corpus + prior batches, never itself —
       // including on retry (see scaladoc). Under `pruneStoredBySig` the
@@ -1566,15 +1558,13 @@ object Dedup {
       // O(batch sigs × row-group), flat in store size (the banded
       // hash-store posture carried to the text tier; partition DIRS are
       // deliberately not used here — they would conflict with
-      // [[compactSignatureStore]]'s bucketed batch=-1 layout, and
+      // [[compactSignatureStore]]'s bucketed generation layout, and
       // sorted row groups deliver the same skip).
-      if (prior.nonEmpty) {
-        val confKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-        val oldThresh = spark.conf.get(confKey, "10")
-        if (pruneStoredBySig)
-          spark.conf.set(confKey, math.max(oldThresh.toInt,
-            HammingKeyPushdownMax + 1).toString)
-        try
+      if (prior.nonEmpty)
+        GraftConfig.scopedConf(spark,
+            (if (pruneStoredBySig) Seq(InFilterThresholdKey ->
+              math.max(inFilterThreshold(spark), HammingKeyPushdownMax + 1)
+                .toString) else Nil): _*) {
           screenAgainst(b,
               spark.read.parquet(storePath)
                 .filter(col("batch") =!= batchId)
@@ -1582,8 +1572,7 @@ object Dedup {
               textCol, idCol, n, bands, minBands, maxBucketSize,
               pruneStoredBySig)
             .write.mode("overwrite").parquet(s"$flaggedPath/batch=$batchId")
-        finally spark.conf.set(confKey, oldThresh)
-      }
+        }
       capBuckets(minhashSignatures(b, textCol, idCol, n, bands), storeCap)
         .sortWithinPartitions("band", "sig")
         .write.mode("overwrite")
@@ -2015,6 +2004,12 @@ object Dedup {
     * rows it skips are worth). */
   val HammingKeyPushdownMax = 4096
 
+  /** The IN-list size past which parquet stops pushing an `isin` into
+    * row-group stats; the store probes raise it for their own scan. */
+  private val InFilterThresholdKey = "spark.sql.parquet.pushdown.inFilterThreshold"
+  private def inFilterThreshold(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf.get(InFilterThresholdKey, "10").toInt
+
   private def kpOf(bandBits: Int): org.apache.spark.sql.Column = {
     val p = math.min(bandBits, HammingStorePrefixBits)
     // unsigned shift: the key is masked to bandBits bits (non-negative)
@@ -2049,7 +2044,7 @@ object Dedup {
     * flat probe cost holds only while the CALLER runs
     * [[compactHammingStore]] on a cadence — a long-running stream that
     * never compacts degrades toward scanning every fresh dir per
-    * micro-batch. The threshold matches [[AbsorbedMarkerRetention]]
+    * micro-batch. The threshold matches [[BatchStore.MarkerRetention]]
     * (the same "unbounded small dirs" budget). */
   val FreshBatchWarnThreshold = 64
 
@@ -2073,11 +2068,10 @@ object Dedup {
     *     stats key-narrow after [[compactHammingStore]], so the scan
     *     reads O(batch × row-group) bytes FLAT in store size;
     *  3. the (band, key) equality join itself (capped buckets).
-    * Retry discipline unchanged: screen against every prior batch dir
-    * (own dir excluded → replay never self-flags), then overwrite the
-    * own dir; a batch id absorbed by compaction carries an
-    * `_absorbed_batch_<id>` marker and replays as a NO-OP (its rows
-    * already live in a consolidated generation). Store rows are
+    * Retry discipline is the [[BatchStore]] one: screen against every
+    * prior batch dir (own dir excluded → replay never self-flags), then
+    * overwrite the own dir; a replay of an id a compaction absorbed is a
+    * NO-OP. Store rows are
     * (id, h, key) per band — bands × 16 B per asset, never payloads. */
   /** Screen a batch against a BANDED hash store ([[hammingScreenBatch]]'s
     * layout) without ingesting it — the read-only probe face of the
@@ -2131,12 +2125,10 @@ object Dedup {
           col("kp").isin((ps.map(_._2).toSeq :+ FreshKp): _*)
       }.reduce(_ || _)
       val keys = bk.map(_._3).distinct
-      val confKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-      val oldThresh = spark.conf.get(confKey, "10")
-      if (keyPushdown)
-        spark.conf.set(confKey,
-          math.max(oldThresh.toInt, keys.length + 1).toString)
-      try {
+      GraftConfig.scopedConf(spark,
+          (if (keyPushdown) Seq(InFilterThresholdKey ->
+            math.max(inFilterThreshold(spark), keys.length + 1).toString)
+          else Nil): _*) {
         val stored0 = spark.read.parquet(storePath)
           .filter(col("batch") =!= excludeBatchId)
           .filter(kpPred)
@@ -2167,7 +2159,7 @@ object Dedup {
           case Some(run) => run(report); report.limit(0)
           case None => report.localCheckpoint(true)
         }
-      } finally spark.conf.set(confKey, oldThresh)
+      }
     } finally bBands.unpersist()
   }
 
@@ -2212,11 +2204,9 @@ object Dedup {
                               mkBands: DataFrame => DataFrame,
                               probeWrite: (DataFrame, String) => Unit): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$storePath/_absorbed_batch_$batchId")))
+    if (BatchStore.absorbed(spark, storePath, batchId))
       return // compacted away — the replay's rows are already consolidated
+    val fs = BatchStore.fs(spark, storePath)
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // SIZE-GATED AQE bypass for the micro-batch's own jobs (probe
     // collect, report write, banded append): on a micro-batch-sized
@@ -2226,17 +2216,12 @@ object Dedup {
     // statically (shuffle partitions are already gate-sized by the
     // caller); a big batch keeps AQE — this is a data-derived gate,
     // not a local[32] hardcode. Restored after the batch.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeOld = spark.conf.get(aqeKey, "true")
     val tinyBatch = batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(64L * 1024 * 1024)
-    if (tinyBatch) spark.conf.set(aqeKey, "false")
-    try {
-      val seen = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$storePath/batch=*"))
-      val prior =
-        if (seen == null) Array.empty[org.apache.hadoop.fs.FileStatus]
-        else seen.filterNot(_.getPath.getName == s"batch=$batchId")
+    try GraftConfig.scopedConf(spark,
+        (if (tinyBatch) Seq("spark.sql.adaptive.enabled" -> "false")
+        else Nil): _*) {
+      val prior = BatchStore.prior(spark, storePath, batchId)
       // fresh kp=FreshKp dirs are ALWAYS probed, so flat probe cost
       // depends on the caller's compactHammingStore cadence — surface
       // a drifting store instead of silently degrading per micro-batch
@@ -2273,10 +2258,7 @@ object Dedup {
         .sortWithinPartitions("band", "key")
         .write.mode("overwrite").partitionBy("band", "kp")
         .parquet(s"$storePath/batch=$batchId")
-    } finally {
-      if (tinyBatch) spark.conf.set(aqeKey, aqeOld)
-      b.unpersist()
-    }
+    } finally b.unpersist()
   }
 
   private[graft] def hammingScreenBatch(batch: DataFrame, batchId: Long,
@@ -2305,13 +2287,6 @@ object Dedup {
         excludeBatchId = batchId,
         sink = Some(df => df.write.mode("overwrite").parquet(path))))
 
-  /** How many `_absorbed_batch_<id>` markers [[compactHammingStore]]
-    * retains (newest ids): the markers exist to no-op an at-least-once
-    * REPLAY of a compacted batch, and Structured Streaming replays
-    * only ids near the checkpoint head — an unbounded marker pile is
-    * the small-files problem wearing a different hat. */
-  val AbsorbedMarkerRetention = 64
-
   /** Compact a banded hash store: fold every committed `batch=<id>`
     * dir (prior consolidated generations included) into ONE
     * key-sorted, (band, kp)-partitioned generation — the maintenance
@@ -2319,57 +2294,28 @@ object Dedup {
     * layout [[hammingScreenBatch]]'s key pushdown needs for flat
     * per-batch probe cost (and the classic small-files remedy: a
     * year of micro-batches is a year × 256 tiny files without it).
-    *
-    * Ceremony (the RpForest.appendBatch staged-rename discipline):
-    *  1. write the consolidated generation to `_compact_stage`
-    *     (underscore-prefixed — readers skip it mid-write);
-    *  2. rename it in as `batch=<gen>` with gen < 0 strictly below
-    *     every prior generation (negative ids never collide with
-    *     stream batch ids);
-    *  3. write `_absorbed_batch_<id>` markers for every absorbed
-    *     non-negative id — from here a replay of an absorbed batch is
-    *     a no-op;
-    *  4. delete the absorbed dirs; prune markers beyond
-    *     [[AbsorbedMarkerRetention]].
-    * A concurrent READER between (2) and (4) sees absorbed rows TWICE
-    * — harmless by construction: the screen's report is
-    * distinct-then-argmin, so duplicate store rows change nothing
-    * (spec-pinned). A crash between (2) and (3) re-absorbs the same
-    * dirs on the next compaction — idempotent, never lossy. Writer
-    * concurrency: single maintenance writer, stream paused or not —
-    * the stream's own dirs are only ever touched by id, and ids the
-    * stream may still rewrite (the checkpoint head) should be left
-    * out via `keepNewest`. Returns the number of batch dirs absorbed. */
+    * The [[BatchStore]] compaction (its scaladoc has the crash/racing
+    * discipline); a concurrent READER that sees absorbed rows twice is
+    * harmless here by construction: the screen's report is
+    * distinct-then-argmin (spec-pinned). Writer concurrency: single
+    * maintenance writer, stream paused or not — ids the stream may still
+    * rewrite (the checkpoint head) should be left out via `keepNewest`.
+    * Returns the number of batch dirs absorbed (0 below two). */
   def compactHammingStore(spark: org.apache.spark.sql.SparkSession,
                           storePath: String, keepNewest: Int = 1,
-                          blockBytes: Long = 0L): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storePath), spark.sparkContext.hadoopConfiguration)
-    val seen = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$storePath/batch=*")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-    val byId = seen.map(s =>
-      s.getPath.getName.stripPrefix("batch=").toLong -> s.getPath).toMap
-    val liveIds = byId.keys.filter(_ >= 0).toSeq.sorted
-    val keep = liveIds.takeRight(keepNewest).toSet
-    val absorb = byId.keys.filterNot(keep).toSeq.sorted
-    if (absorb.size < 2) return 0L // nothing to fold
-    val gen = math.min(-1L, byId.keys.min - 1L)
-    val stage = new org.apache.hadoop.fs.Path(storePath, "_compact_stage")
-    fs.delete(stage, true)
-    val absorbPred = col("batch").isin(absorb: _*)
-    // blockBytes > 0 tunes the parquet row-group size DOWN for
-    // point-lookup-heavy stores: the probe's key pushdown skips at
-    // ROW-GROUP granularity, so a store whose (band, kp) partitions
-    // fit one default-size group can't skip within a partition —
-    // smaller groups buy O(batch-keys × group) probe reads at the
-    // price of slightly worse compression (the classic index-store
-    // trade; ScaleProbe `hamscreen` measures the curve).
-    // layout-agnostic data columns: everything but the batch dir key
-    // (the 64-bit store carries `h`, the wide store `code`).
-    // Fresh batch dirs carry kp = FreshKp (see [[FreshKp]]); compaction
-    // assigns the REAL key prefix from the layout sidecar so the
-    // consolidated generation gets the full (band, kp) prune fan-out.
+                          blockBytes: Long = 0L): Long =
+    BatchStore.compact(spark, storePath,
+        hammingFold(spark, storePath, blockBytes), keepNewest, minDirs = 2)
+      .fold(0L)(_.dirs.size.toLong)
+
+  /** [[compactHammingStore]]'s layout. Fresh batch dirs carry
+    * kp = [[FreshKp]]; the fold re-derives the REAL key prefix from the
+    * layout sidecar so the consolidated generation gets the full
+    * (band, kp) prune fan-out. */
+  private[graft] def hammingFold(spark: org.apache.spark.sql.SparkSession,
+                                 storePath: String,
+                                 blockBytes: Long): BatchStore.Fold = {
+    val fs = BatchStore.fs(spark, storePath)
     val sidecarPath = new org.apache.hadoop.fs.Path(
       storePath, HammingLayoutSidecar)
     val sidecarTxt: Option[String] = if (fs.exists(sidecarPath)) {
@@ -2380,12 +2326,6 @@ object Dedup {
     def field(name: String): Option[Int] = sidecarTxt.flatMap(t =>
       s"$name=(\\d+)".r.findFirstMatchIn(t).map(_.group(1).toInt))
     val sidecarBits = field("bandBits")
-    val folded0 = spark.read.parquet(storePath).filter(absorbPred)
-      .drop("batch")
-    val folded = sidecarBits match {
-      case Some(bits) => folded0.drop("kp").withColumn("kp", kpOf(bits))
-      case None => folded0 // pre-sidecar store: keep dir-recorded kp
-    }
     // explicit partition count = the occupied-cell upper bound: the
     // keyed repartition is otherwise an ENSURE_REQUIREMENTS exchange
     // AQE coalesces to a handful of tasks, each writing dozens of
@@ -2394,36 +2334,32 @@ object Dedup {
     // still ~cells-way parallel vs ~1)
     val cells = (for { b <- field("bands"); m <- sidecarBits }
       yield b * (1 << math.min(m, HammingStorePrefixBits))).getOrElse(0)
-    val keyedRepart =
-      if (cells > 0) folded.repartition(cells, col("band"), col("kp"))
-      else folded.repartition(col("band"), col("kp"))
-    val writer0 = keyedRepart
-      .sortWithinPartitions("band", "kp", "key")
-      .write.mode("overwrite").partitionBy("band", "kp")
-    val writer = if (blockBytes > 0)
-      writer0.option("parquet.block.size", blockBytes.toString)
-        .option("parquet.page.size",
-          math.max(1024L, blockBytes / 8).toString)
-    else writer0
-    writer.parquet(stage.toString)
-    val genDir = new org.apache.hadoop.fs.Path(storePath, s"batch=$gen")
-    if (!fs.rename(stage, genDir))
-      throw new java.io.IOException(
-        s"compactHammingStore: cannot rename $stage -> $genDir")
-    for (id <- absorb if id >= 0)
-      fs.create(new org.apache.hadoop.fs.Path(
-        storePath, s"_absorbed_batch_$id"), true).close()
-    for (id <- absorb) fs.delete(byId(id), true)
-    // marker retention: keep the newest AbsorbedMarkerRetention ids
-    val markers = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$storePath/_absorbed_batch_*")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .map(m => m.getPath.getName.stripPrefix("_absorbed_batch_").toLong
-        -> m.getPath)
-      .sortBy(_._1)
-    markers.dropRight(AbsorbedMarkerRetention)
-      .foreach { case (_, p) => fs.delete(p, false) }
-    absorb.size.toLong
+    BatchStore.Fold(
+      derive = rows => sidecarBits match {
+        case Some(bits) => rows.drop("kp").withColumn("kp", kpOf(bits))
+        case None => rows // pre-sidecar store: keep dir-recorded kp
+      },
+      write = { (rows, stage) =>
+        val keyedRepart =
+          if (cells > 0) rows.repartition(cells, col("band"), col("kp"))
+          else rows.repartition(col("band"), col("kp"))
+        // blockBytes > 0 tunes the parquet row-group size DOWN for
+        // point-lookup-heavy stores: the probe's key pushdown skips at
+        // ROW-GROUP granularity, so a store whose (band, kp) partitions
+        // fit one default-size group can't skip within a partition —
+        // smaller groups buy O(batch-keys × group) probe reads at the
+        // price of slightly worse compression (the classic index-store
+        // trade; ScaleProbe `hamscreen` measures the curve).
+        val writer0 = keyedRepart
+          .sortWithinPartitions("band", "kp", "key")
+          .write.mode("overwrite").partitionBy("band", "kp")
+        val writer = if (blockBytes > 0)
+          writer0.option("parquet.block.size", blockBytes.toString)
+            .option("parquet.page.size",
+              math.max(1024L, blockBytes / 8).toString)
+        else writer0
+        writer.parquet(stage)
+      })
   }
 
   /** STREAMING asset-dedup screen — [[screenedIngest]] for perceptual
@@ -2445,17 +2381,11 @@ object Dedup {
                             bands: Int = 4, bandBits: Int = 16,
                             maxHamming: Int = 2,
                             maxBucketSize: Int = DefaultMaxBucketSize)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(assets.isStreaming, "hammingScreenedIngest expects a streaming DataFrame")
-    assets.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        hammingScreenBatch(batch.toDF(), batchId, storePath, flaggedPath,
-          hashCol, idCol, bands, bandBits, maxHamming, maxBucketSize)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(assets, checkpointPath, "hammingScreenedIngest") {
+      (batch, batchId) => hammingScreenBatch(batch, batchId, storePath,
+        flaggedPath, hashCol, idCol, bands, bandBits, maxHamming, maxBucketSize)
+    }
 
   /** [[hammingScreenedIngest]] for WIDE codes (`array<bigint>` — the
     * 256-bit pHash class real image dedup runs): same banded store
@@ -2467,18 +2397,12 @@ object Dedup {
                                 bands: Int = 8, bandBits: Int = 32,
                                 words: Int = 4, maxHamming: Int = 6,
                                 maxBucketSize: Int = DefaultMaxBucketSize)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(assets.isStreaming,
-      "hammingScreenedIngestWide expects a streaming DataFrame")
-    assets.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        hammingScreenBatchWide(batch.toDF(), batchId, storePath, flaggedPath,
-          codeCol, idCol, bands, bandBits, words, maxHamming, maxBucketSize)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(assets, checkpointPath, "hammingScreenedIngestWide") {
+      (batch, batchId) => hammingScreenBatchWide(batch, batchId, storePath,
+        flaggedPath, codeCol, idCol, bands, bandBits, words, maxHamming,
+        maxBucketSize)
+    }
 
   /** Embedding-cosine near-dup pairs within a blocking key (e.g. a label or
     * IVF cell): equality-join on the block, codegen dot product, keep pairs

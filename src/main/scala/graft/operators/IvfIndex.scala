@@ -341,10 +341,13 @@ object IvfIndex {
     val tot = allCells.agg(
       sum("n_vectors").cast("double").as("__n"),
       sum(col("n_vectors") * col("n_vectors")).cast("double").as("__ss"))
+    // ANSI-guarded: an empty input (an empty micro-batch) has __n = 0
     allCells.crossJoin(broadcast(tot))
       .select(col("cell_id"), col("n_vectors"),
-        round(col("n_vectors").cast("double") / col("__n"), 4).as("frac"),
-        round(lit(ncells.toDouble) * col("__ss") / (col("__n") * col("__n")), 4)
+        round(when(col("__n") > 0,
+          col("n_vectors").cast("double") / col("__n")), 4).as("frac"),
+        round(when(col("__n") > 0,
+          lit(ncells.toDouble) * col("__ss") / (col("__n") * col("__n"))), 4)
           .as("imbalance_factor"))
   }
 

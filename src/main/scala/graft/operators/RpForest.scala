@@ -297,14 +297,13 @@ object RpForest {
     // micro-batch's probe/count/write jobs each pay an AQE replan +
     // sub-job per exchange — static planning drops the per-batch
     // driver-gap overhead; a big batch keeps AQE. Restored after.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeOld = spark.conf.get(aqeKey, "true")
     val tinyBatch = newRows.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(64L * 1024 * 1024)
-    if (tinyBatch) spark.conf.set(aqeKey, "false")
-    val routed = assign(newRows, f, embCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n =
+    val n = graft.GraftConfig.scopedConf(spark,
+        (if (tinyBatch) Seq("spark.sql.adaptive.enabled" -> "false")
+        else Nil): _*) {
+      val routed = assign(newRows, f, embCol, idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         requireNoDups(storePath, routed)
         val cnt = routed.filter(col("tree") === 0).count()
@@ -335,26 +334,13 @@ object RpForest {
               s"${st.getPath} -> $dst")
         }
         cnt
-      } finally {
-        if (tinyBatch) spark.conf.set(aqeKey, aqeOld)
-        routed.unpersist()
-      }
+      } finally routed.unpersist()
+    }
     fs.delete(stage, true)
     // 4. commit
     fs.create(marker, true).close()
     n
   }
-
-  /** How many `_rpf_batch_<id>` committed markers [[compactStore]]
-    * retains (newest ids — [[graft.operators.Dedup.AbsorbedMarkerRetention]]'s
-    * analog): the marker is [[appendBatch]]'s replay guard, and
-    * Structured Streaming replays only ids near the checkpoint head,
-    * so an unbounded marker pile is the small-files problem wearing a
-    * different hat. A replay of an id whose marker was pruned fails
-    * LOUDLY at the dup probe (its rows live in the consolidated
-    * files) — safe, and unreachable when the store and the stream's
-    * checkpoint share a lifecycle. */
-  val BatchMarkerRetention = 64
 
   /** Compact an [[appendBatch]]-grown store: fold the base files, the
     * committed `b<id>-*` batch files and any prior `c<gen>-*`
@@ -379,7 +365,12 @@ object RpForest {
     *     the prefix never matches [[appendBatch]]'s `b<id>-*` crash
     *     scrub glob);
     *  3. delete the absorbed files;
-    *  4. prune `_rpf_batch_*` markers beyond [[BatchMarkerRetention]].
+    *  4. prune `_rpf_batch_*` markers beyond
+    *     [[graft.streaming.BatchStore.MarkerRetention]] — the marker is
+    *     [[appendBatch]]'s replay guard; a replay of an id whose marker
+    *     was pruned fails LOUDLY at the dup probe (its rows live in the
+    *     consolidated files) — safe, and unreachable when the store and
+    *     the stream's checkpoint share a lifecycle.
     *
     * A concurrent READER between (2) and (3) can see absorbed rows
     * twice — harmless by construction: [[search]] is
@@ -450,11 +441,7 @@ object RpForest {
     }
     fs.delete(stage, true)
     absorb.foreach(st => fs.delete(st.getPath, false))
-    val markers = glob(s"$storePath/_rpf_batch_*")
-      .map(m => m.getPath.getName.stripPrefix("_rpf_batch_").toLong -> m.getPath)
-      .sortBy(_._1)
-    markers.dropRight(BatchMarkerRetention)
-      .foreach { case (_, p) => fs.delete(p, false) }
+    graft.streaming.BatchStore.pruneMarkers(fs, storePath, "_rpf_batch_")
     absorb.length.toLong
   }
 

@@ -12,13 +12,13 @@ import org.apache.spark.sql.functions._
   * FAISS add-after-train lifecycle (`index.add` on a trained
   * `IndexIVFPQ`) as a `foreachBatch` stream.
   *
-  * Layout: `corpusPath/batch=<id>/cell_id=<c>/…` — the per-batch-id dir
-  * makes an at-least-once retry an idempotent overwrite (the
-  * screenedIngest contract), and `cell_id` stays a partition column
-  * UNDER it, so a probed search over the whole corpus still prunes to
-  * `nprobe/nlist` of every batch's files. No shuffle anywhere: assign +
-  * residual + encode is one codegen projection, and the write
-  * partitions by a column the batch already carries.
+  * Layout: `corpusPath/batch=<id>/cell_id=<c>/…` — a [[BatchStore]]
+  * (its scaladoc has the retry and compaction contract); `cell_id` stays
+  * a partition column UNDER it, so a probed search over the whole
+  * corpus still prunes to `nprobe/nlist` of every batch's files. No
+  * shuffle anywhere: assign + residual + encode is one codegen
+  * projection, and the write partitions by a column the batch already
+  * carries.
   *
   * Index health rides along: each batch overwrites a one-row stats dir
   * (`statsPath/batch=<id>`) carrying the batch's occupancy imbalance
@@ -33,17 +33,11 @@ object IndexIngest {
                       corpusPath: String, statsPath: String,
                       checkpointPath: String,
                       idCol: String = "doc_id", embCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(newVecs.isStreaming, "quantizedIngest expects a streaming DataFrame")
-    newVecs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        ingestBatch(batch.toDF(), batchId, ivf, pq, corpusPath, statsPath,
-          idCol, embCol)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(newVecs, checkpointPath, "quantizedIngest") {
+      (batch, batchId) => ingestBatch(batch, batchId, ivf, pq, corpusPath,
+        statsPath, idCol, embCol)
+    }
 
   /** One micro-batch, extracted so retry semantics are testable without
     * forcing a real foreachBatch crash (the screenBatch pattern). */
@@ -51,6 +45,7 @@ object IndexIngest {
                                  ivf: IvfIndex.Ivf, pq: PqIndex.Pq,
                                  corpusPath: String, statsPath: String,
                                  idCol: String, embCol: String): Unit = {
+    if (BatchStore.absorbed(batch.sparkSession, corpusPath, batchId)) return
     val withCells = IvfIndex.assign(batch, ivf, embCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -93,51 +88,23 @@ object IndexIngest {
   def loadCorpus(spark: SparkSession, corpusPath: String): DataFrame =
     spark.read.parquet(corpusPath)
 
-  /** Fold the per-batch dirs of a streamed quantized corpus into ONE
-    * compacted dir (`batch=-1/cell_id=<c>/…`, one file per cell) — the
-    * [[graft.operators.Dedup.compactSignatureStore]] maintenance
-    * contract for the codes corpus. A year of micro-batches otherwise
-    * leaves thousands of `batch=<id>` dirs whose file listing and
-    * per-file open cost tax every probed search.
-    *
-    * The `batch=`/`cell_id=` partition scheme is PRESERVED: later
-    * micro-batches keep appending `batch=<id>` dirs beside the
-    * compacted one (stream batch ids are non-negative; compacted dirs
-    * take successive NEGATIVE ids, so they never collide), probed
-    * searches prune by `cell_id` across both, and a later compaction
-    * folds everything again. `repartition(cell_id)` gives each cell
-    * one write task → one file per cell.
-    *
-    * Crash/racing discipline: ONLY the dirs in the initial snapshot are
-    * read and later deleted, so a micro-batch landing mid-compaction is
-    * neither folded nor dropped; the rename into place happens BEFORE
-    * the snapshot dirs are deleted and its result is `require`d, so a
-    * failure leaves the corpus intact (plus an orphan tmp dir that the
-    * next run clears). A crash in the delete loop leaves some rows
-    * visible twice — encode is deterministic, so the full-row
-    * `dropDuplicates` here makes a re-run heal that exactly. The health
+  /** Fold the per-batch dirs of a streamed quantized corpus into its
+    * next negative generation (`batch=<gen>/cell_id=<c>/…`, one file per
+    * cell) — the [[BatchStore]] compaction, whose scaladoc has the
+    * crash/racing discipline. A year of micro-batches otherwise leaves
+    * thousands of `batch=<id>` dirs whose file listing and per-file open
+    * cost tax every probed search. The `batch=`/`cell_id=` partition
+    * scheme is PRESERVED, so probed searches prune by `cell_id` across
+    * the generation and later micro-batches alike; `repartition(cell_id)`
+    * gives each cell one write task → one file per cell. The health
     * history under `statsPath` is separate and untouched. */
-  def compactQuantizedCorpus(spark: SparkSession, corpusPath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(corpusPath), spark.sparkContext.hadoopConfiguration)
-    val seen = fs.globStatus(new org.apache.hadoop.fs.Path(s"$corpusPath/batch=*"))
-    require(seen != null && seen.nonEmpty, s"no quantized corpus at $corpusPath")
-    val tmp = new org.apache.hadoop.fs.Path(corpusPath + "__compact_tmp")
-    fs.delete(tmp, true)
-    val seenPaths = seen.map(_.getPath.toString).toSeq
-    spark.read.option("basePath", corpusPath).parquet(seenPaths: _*)
-      .drop("batch")
-      .dropDuplicates()
-      .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(tmp.toString)
-    val seenIds = seenPaths.map(_.split("batch=").last.toLong)
-    val target = math.min(seenIds.min, 0L) - 1L
-    val dest = new org.apache.hadoop.fs.Path(s"$corpusPath/batch=$target")
-    require(fs.rename(tmp, dest),
-      s"compaction rename failed: $tmp -> $dest (corpus left untouched)")
-    seen.foreach(s => fs.delete(s.getPath, true))
-    ()
-  }
+  def compactQuantizedCorpus(spark: SparkSession, corpusPath: String): Unit =
+    require(BatchStore.compact(spark, corpusPath, corpusFold).nonEmpty,
+      s"no quantized corpus at $corpusPath")
+
+  private[graft] val corpusFold = BatchStore.Fold((rows, stage) =>
+    rows.repartition(col("cell_id"))
+      .write.mode("overwrite").partitionBy("cell_id").parquet(stage))
 
   /** Per-batch health history
     * (batch_id, n_vectors, imbalance_factor, mean_resid). */

@@ -20,9 +20,12 @@ import org.apache.spark.sql.functions._
   * (query, cell, slot) join fans rows out to their queries, and the
   * bounded aggregator ships only partial top-k lists.
   *
-  * Results land at `resultsPath/batch=<id>` — the per-batch-id overwrite
-  * makes an at-least-once retry idempotent (the [[IndexIngest]]
-  * contract), and a results consumer tails the dir in batch order. */
+  * Results land at `resultsPath/batch=<id>`, a [[BatchStore]] (its
+  * scaladoc has the retry and compaction contract); a results consumer
+  * tails the dir in batch order. Each served batch first re-lists the
+  * index frames ([[BatchStore.relist]]), so a running stream serves
+  * batches ingested after it started and survives a compaction of the
+  * index it reads. */
 object QueryServe {
 
   /** Max queries per [[graft.operators.GraphSearch.searchBeamBatch]]
@@ -42,17 +45,11 @@ object QueryServe {
                    checkpointPath: String, k: Int, nprobe: Int,
                    queryIdCol: String = "query_id",
                    embCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(queries.isStreaming, "servedSearch expects a streaming DataFrame")
-    queries.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        serveBatch(batch.toDF(), batchId, ivf, pq, encoded, resultsPath,
-          k, nprobe, queryIdCol, embCol)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(queries, checkpointPath, "servedSearch") {
+      (batch, batchId) => serveBatch(batch, batchId, ivf, pq, encoded,
+        resultsPath, k, nprobe, queryIdCol, embCol)
+    }
 
   /** One micro-batch, extracted so retry semantics are testable without
     * forcing a real foreachBatch crash (the ingestBatch pattern). */
@@ -61,10 +58,9 @@ object QueryServe {
                                 encoded: DataFrame, resultsPath: String,
                                 k: Int, nprobe: Int,
                                 queryIdCol: String, embCol: String): Unit = {
-    val qs = batch.select(col(queryIdCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    val qs = requests(batch, batchId, resultsPath, queryIdCol, embCol)
     if (qs.isEmpty) return
-    PqIndex.searchIvfAdcBatch(encoded, ivf, pq, qs, k, nprobe)
+    PqIndex.searchIvfAdcBatch(BatchStore.relist(encoded), ivf, pq, qs, k, nprobe)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
   }
@@ -82,17 +78,11 @@ object QueryServe {
                         k: Int, nprobe: Int = 4, beamWidth: Int = 8,
                         hops: Int = 3, queryIdCol: String = "query_id",
                         embCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(queries.isStreaming, "servedGraphSearch expects a streaming DataFrame")
-    queries.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        serveGraphBatch(batch.toDF(), batchId, graph, withCells, ivf,
-          resultsPath, k, nprobe, beamWidth, hops, queryIdCol, embCol)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(queries, checkpointPath, "servedGraphSearch") {
+      (batch, batchId) => serveGraphBatch(batch, batchId, graph, withCells,
+        ivf, resultsPath, k, nprobe, beamWidth, hops, queryIdCol, embCol)
+    }
 
   /** One graph-served micro-batch (testable retry form). */
   private[graft] def serveGraphBatch(batch: DataFrame, batchId: Long,
@@ -102,9 +92,9 @@ object QueryServe {
                                      hops: Int, queryIdCol: String,
                                      embCol: String,
                                      chunkSize: Int = GraphChunkSize): Unit = {
-    val qs = batch.select(col(queryIdCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    val qs = requests(batch, batchId, resultsPath, queryIdCol, embCol)
     if (qs.isEmpty) return
+    BatchStore.relist(graph); BatchStore.relist(withCells)
     // A micro-batch is unbounded (a queued burst arrives as ONE batch),
     // but each searchBeamBatch call bakes one vector literal + one
     // dot_f32 column per query into every scan — past a few dozen
@@ -119,6 +109,14 @@ object QueryServe {
     out.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
   }
+
+  /** The micro-batch's (query id, vector) requests — none for a replay
+    * of a batch id a compaction already absorbed. */
+  private def requests(batch: DataFrame, batchId: Long, resultsPath: String,
+                       queryIdCol: String, embCol: String): Seq[(Long, Array[Float])] =
+    if (BatchStore.absorbed(batch.sparkSession, resultsPath, batchId)) Nil
+    else batch.select(col(queryIdCol), col(embCol)).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
 
   /** All served results so far: partition discovery yields the `batch`
     * dir column, and each row also carries the written `batch_id`, so a
@@ -141,45 +139,23 @@ object QueryServe {
     * dirs removed. */
   def pruneResults(spark: org.apache.spark.sql.SparkSession,
                    resultsPath: String, upToBatchId: Long): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(resultsPath), spark.sparkContext.hadoopConfiguration)
-    val seen = fs.globStatus(new org.apache.hadoop.fs.Path(s"$resultsPath/batch=*"))
-    if (seen == null) return 0
-    val dead = seen.filter { s =>
-      val id = s.getPath.getName.stripPrefix("batch=").toLong
-      id >= 0 && id <= upToBatchId
-    }
-    dead.foreach(s => fs.delete(s.getPath, true))
+    val dead = BatchStore.batchDirs(spark, resultsPath)
+      .filter { case (id, _) => id >= 0 && id <= upToBatchId }
+    val fs = BatchStore.fs(spark, resultsPath)
+    dead.foreach(d => fs.delete(d._2, true))
     dead.length
   }
 
-  /** Fold every retained `batch=<id>` dir into ONE compacted dir so the
-    * listing stays bounded even for results kept long-term (audit /
-    * replay). The [[IndexIngest.compactQuantizedCorpus]] discipline:
-    * only the snapshot dirs are folded and deleted (a racing micro-batch
-    * is neither folded nor dropped), retried-duplicate rows collapse via
-    * full-row dropDuplicates (serving is deterministic), the rename into
-    * a fresh NEGATIVE batch id happens before any delete and is
-    * `require`d, so a failure leaves results intact. */
+  /** Fold every retained `batch=<id>` dir into the next negative
+    * generation so the listing stays bounded even for results kept
+    * long-term (audit / replay) — the [[BatchStore]] compaction (serving
+    * is deterministic, so its full-row dedup collapses retried
+    * duplicates). */
   def compactResults(spark: org.apache.spark.sql.SparkSession,
-                     resultsPath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(resultsPath), spark.sparkContext.hadoopConfiguration)
-    val seen = fs.globStatus(new org.apache.hadoop.fs.Path(s"$resultsPath/batch=*"))
-    require(seen != null && seen.nonEmpty, s"no served results at $resultsPath")
-    val tmp = new org.apache.hadoop.fs.Path(resultsPath + "__compact_tmp")
-    fs.delete(tmp, true)
-    val seenPaths = seen.map(_.getPath.toString).toSeq
-    spark.read.option("basePath", resultsPath).parquet(seenPaths: _*)
-      .drop("batch")
-      .dropDuplicates()
-      .write.mode("overwrite").parquet(tmp.toString)
-    val seenIds = seenPaths.map(_.split("batch=").last.toLong)
-    val target = math.min(seenIds.min, 0L) - 1L
-    val dest = new org.apache.hadoop.fs.Path(s"$resultsPath/batch=$target")
-    require(fs.rename(tmp, dest),
-      s"results compaction rename failed: $tmp -> $dest (results left untouched)")
-    seen.foreach(s => fs.delete(s.getPath, true))
-    ()
-  }
+                     resultsPath: String): Unit =
+    require(BatchStore.compact(spark, resultsPath, resultsFold).nonEmpty,
+      s"no served results at $resultsPath")
+
+  private[graft] val resultsFold = BatchStore.Fold((rows, stage) =>
+    rows.write.mode("overwrite").parquet(stage))
 }

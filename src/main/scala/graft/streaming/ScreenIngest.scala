@@ -23,23 +23,15 @@ import org.apache.spark.sql.functions._
   * unbounded stream. */
 object ScreenIngest {
 
-  /** The shared per-batch-id-idempotent foreachBatch scaffold: every
-    * ingest leg in this file is `projection(batch)` written to
-    * `outPath/batch=<id>` with overwrite (at-least-once retry safe) —
-    * one place to fix the idempotence/checkpoint contract. */
+  /** Every ingest leg in this file is `projection(batch)` written to
+    * `outPath/batch=<id>` with overwrite (at-least-once retry safe). */
   private def batchIngest(stream: DataFrame, outPath: String,
                           checkpointPath: String, what: String)
                          (projection: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stream.isStreaming, s"$what expects a streaming DataFrame")
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        writeBatch(projection(batch.toDF()), outPath, batchId)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.stream(stream, checkpointPath, what) { (batch, batchId) =>
+      writeBatch(projection(batch), outPath, batchId)
+    }
 
   /** The ONE place the per-batch-id overwrite (at-least-once retry
     * idempotence) semantics live — the streaming lambda and the
@@ -129,5 +121,5 @@ object ScreenIngest {
   }
 
   def loadVerdicts(spark: SparkSession, verdictPath: String): DataFrame =
-    spark.read.option("basePath", verdictPath).parquet(s"$verdictPath/batch=*")
+    spark.read.parquet(verdictPath)
 }

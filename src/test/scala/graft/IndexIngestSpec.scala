@@ -165,4 +165,26 @@ class IndexIngestSpec extends AnyFunSuite {
     assert(second == first, "retry duplicated or altered the batch")
     assert(first.length == 40)
   }
+
+  test("an empty micro-batch ingests: n_vectors = 0, and a later batch still lands") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val train = clustered(0 until 300, 6).toDF("doc_id", "embedding")
+    val ivf = IvfIndex.train(train, nlist = 6)
+    val (_, pq) = PqIndex.buildIvfAdc(IvfIndex.assign(train, ivf), ivf, m = 4, ksub = 8)
+    val dir = java.nio.file.Files.createTempDirectory("ingest-empty").toString
+    val in = MemoryStream[(Long, Array[Float])]
+    val q = IndexIngest.quantizedIngest(in.toDF().toDF("doc_id", "embedding"),
+      ivf, pq, s"$dir/corpus", s"$dir/stats", s"$dir/ckpt")
+    try {
+      in.addData(Seq.empty[(Long, Array[Float])])
+      q.processAllAvailable()
+      in.addData(clustered(500 until 540, 6))
+      q.processAllAvailable()
+    } finally q.stop()
+    val stats = IndexIngest.loadStats(spark, s"$dir/stats")
+      .select("batch_id", "n_vectors").as[(Long, Long)].collect().toMap
+    assert(stats == Map(0L -> 0L, 1L -> 40L), s"stats: $stats")
+    assert(IndexIngest.loadCorpus(spark, s"$dir/corpus").count() == 40L)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{IvfIndex, PqIndex}
-import graft.streaming.QueryServe
+import graft.streaming.{IndexIngest, QueryServe}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -189,5 +189,55 @@ class QueryServeSpec extends AnyFunSuite {
     assert(rows().map(_._5) == beforeCompact.map(_._5) + 7L)
     assert(QueryServe.pruneResults(spark, results, upToBatchId = 7L) == 1)
     assert(rows() == beforeCompact)
+  }
+
+  test("a running served stream sees batches ingested after it started and survives a compaction") {
+    val r = new scala.util.Random(99)
+    val anchors = Array.fill(6)(Array.fill(16)(r.nextGaussian().toFloat * 5f))
+    def vecs(ids: Range) = ids.map(i =>
+      (i.toLong, anchors(i % 6).map(_ + r.nextGaussian().toFloat * 0.3f)))
+    val docs = vecs(0 until 300).toDF("doc_id", "embedding")
+    val ivf = IvfIndex.train(docs, nlist = 6)
+    val (_, pq) = PqIndex.buildIvfAdc(IvfIndex.assign(docs, ivf), ivf, m = 4, ksub = 8)
+    val dir = java.nio.file.Files.createTempDirectory("serve-fresh").toString
+    val corpus = s"$dir/corpus"
+    def ingest(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      IndexIngest.ingestBatch(df, id, ivf, pq, corpus, s"$dir/stats",
+        "doc_id", "embedding")
+    ingest(docs, 0L)
+    val staging = s"$dir/requests"
+    def request(reqs: Seq[(Long, Array[Float])]): Unit =
+      reqs.toDF("query_id", "embedding").write.mode("append").parquet(staging)
+    def answers(qids: Set[Long]): Map[Long, Seq[(Long, Double, Int)]] =
+      QueryServe.loadResults(spark, s"$dir/results")
+        .select("query_id", "doc_id", "adc", "doc_rank")
+        .as[(Long, Long, Double, Int)].collect()
+        .filter(a => qids(a._1)).groupBy(_._1)
+        .map { case (q, as) => q -> as.map(a => (a._2, a._3, a._4)).sortBy(_._3).toSeq }
+    request(Seq(1L -> vecs(0 until 1).head._2))
+    val q = QueryServe.servedSearch(
+      spark.readStream.schema(schema).parquet(staging), ivf, pq,
+      IndexIngest.loadCorpus(spark, corpus), s"$dir/results", s"$dir/ckpt",
+      k = 5, nprobe = 2)
+    try {
+      q.processAllAvailable()
+      // ingested AFTER the stream bound its corpus frame
+      val fresh = vecs(1000 until 1003)
+      ingest(fresh.toDF("doc_id", "embedding"), 1L)
+      request(fresh.zipWithIndex.map { case ((_, v), i) => (100L + i, v) })
+      q.processAllAvailable()
+      val first = answers(Set(100L, 101L, 102L))
+      fresh.zipWithIndex.foreach { case ((id, _), i) =>
+        assert(first.getOrElse(100L + i, Nil).exists(_._1 == id),
+          s"fresh doc $id not served: ${first.get(100L + i)}")
+      }
+      // compaction deletes every dir the stream listed; the next served
+      // batch answers identically from the new generation
+      IndexIngest.compactQuantizedCorpus(spark, corpus)
+      request(fresh.zipWithIndex.map { case ((_, v), i) => (200L + i, v) })
+      q.processAllAvailable()
+      val second = answers(Set(200L, 201L, 202L)).map { case (k, v) => (k - 100L) -> v }
+      assert(second == first, "answers changed across the compaction")
+    } finally q.stop()
   }
 }

@@ -297,8 +297,8 @@ class RpForestSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want)
     // second compaction folds the now-idle head batch + prior gen into
-    // gen 2; marker retention keeps the newest BatchMarkerRetention ids
-    for (id <- 100L until (100L + RpForest.BatchMarkerRetention))
+    // gen 2; marker retention keeps the newest MarkerRetention ids
+    for (id <- 100L until (100L + graft.streaming.BatchStore.MarkerRetention))
       java.nio.file.Files.createFile(
         java.nio.file.Paths.get(path, s"_rpf_batch_$id"))
     assert(RpForest.compactStore(spark, path, keepNewest = 0,
@@ -314,7 +314,7 @@ class RpForestSpec extends AnyFunSuite {
       .iterator().asScala.map(_.getFileName.toString)
       .filter(_.startsWith("_rpf_batch_"))
       .map(_.stripPrefix("_rpf_batch_").toLong).toSeq.sorted
-    assert(markerIds.size == RpForest.BatchMarkerRetention)
+    assert(markerIds.size == graft.streaming.BatchStore.MarkerRetention)
     assert(!markerIds.contains(0L), "oldest markers should be pruned first")
     assert(files().exists(_.contains("c2-")), "expected a gen-2 file")
   }
