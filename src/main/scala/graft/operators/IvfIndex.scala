@@ -82,40 +82,67 @@ object IvfIndex {
   // -------------------------------------------------------------------
 
   def save(spark: SparkSession, ivf: Ivf, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      ivf.centroids match {
-        case None => sb.append(s"${ivf.nlist} 0\n")
-        case Some(cs) =>
-          sb.append(s"${ivf.nlist} ${if (cs.isEmpty) 0 else cs(0).length}\n")
-          cs.foreach { c => sb.append(c.mkString(" ")).append('\n') }
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
+    val sb = new StringBuilder
+    ivf.centroids match {
+      case None => sb.append(s"${ivf.nlist} 0\n")
+      case Some(cs) =>
+        sb.append(s"${ivf.nlist} ${if (cs.isEmpty) 0 else cs(0).length}\n")
+        cs.foreach { c => sb.append(c.mkString(" ")).append('\n') }
+    }
+    writeArtifact(spark, path, sb.toString)
   }
 
-  def load(spark: SparkSession, path: String): Ivf = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try {
-      val Array(nlist, dim) = in.readLine().split(" ").map(_.toInt)
+  def load(spark: SparkSession, path: String): Ivf =
+    readArtifact(spark, path) { rows =>
+      require(rows.nonEmpty && rows.head.length == 2, "header is not `nlist dim`")
+      val Array(nlist, dim) = rows.head.map(_.toInt)
       if (dim == 0) Ivf(None, nlist)
       else {
-        val cs = Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .map(_.split(" ").map(_.toDouble)).toArray
+        val cs = rows.tail.toArray
+        require(cs.nonEmpty, "no centroid lines")
+        require(cs.forall(_.length == dim), s"a centroid line without $dim values")
         Ivf(Some(cs), nlist)
       }
-    } finally in.close()
-  }
+    }
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
+  /** Write the text artifact `body` at `path` through a `_`-prefixed temp
+    * sibling renamed over the target, so a crash mid-write never leaves a
+    * truncated artifact that [[exists]] (and so every `buildOrLoad`) would
+    * trust: the target is the old artifact, absent, or the whole new one. */
+  private[graft] def writeArtifact(spark: SparkSession, path: String,
+                                   body: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s"_${p.getName}")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    // HDFS-style renames refuse an existing target
+    if (fs.exists(p)) fs.delete(p, false)
+    require(fs.rename(tmp, p), s"could not rename $tmp over $p")
+  }
+
+  /** Parse the text artifact at `path` as one row of numbers per line.
+    * A malformed artifact (no final newline, an unparsable number, or a
+    * failed `require` in `parse`) fails with an IllegalArgumentException
+    * naming `path`. */
+  private[graft] def readArtifact[T](spark: SparkSession, path: String)(
+      parse: IndexedSeq[Array[Double]] => T): T = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    try {
+      require(text.endsWith("\n"), "no final newline")
+      parse(text.split('\n').toIndexedSeq.map(_.trim.split(' ').map(_.toDouble)))
+    } catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"malformed index artifact $path: ${e.getMessage}", e)
+    }
   }
 
   /** Load the persisted quantizer if present, else train once and save —

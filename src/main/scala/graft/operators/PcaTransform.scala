@@ -72,31 +72,21 @@ object PcaTransform {
     * lines) — same shape as the IVF quantizer's, and the source the
     * generated DuckDB oracle replays from. */
   def save(spark: SparkSession, pca: Pca, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      sb.append(s"${pca.outDim} ${pca.mean.length}\n")
-      sb.append(pca.mean.mkString(" ")).append('\n')
-      pca.components.foreach(c => sb.append(c.mkString(" ")).append('\n'))
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
+    val sb = new StringBuilder
+    sb.append(s"${pca.outDim} ${pca.mean.length}\n")
+    sb.append(pca.mean.mkString(" ")).append('\n')
+    pca.components.foreach(c => sb.append(c.mkString(" ")).append('\n'))
+    IvfIndex.writeArtifact(spark, path, sb.toString)
   }
 
-  def load(spark: SparkSession, path: String): Pca = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try {
-      val Array(k, _) = in.readLine().split(" ").map(_.toInt)
-      val mean = in.readLine().split(" ").map(_.toDouble)
-      val comps = (0 until k)
-        .map(_ => in.readLine().split(" ").map(_.toDouble)).toArray
-      Pca(mean, comps)
-    } finally in.close()
-  }
+  def load(spark: SparkSession, path: String): Pca =
+    IvfIndex.readArtifact(spark, path) { rows =>
+      require(rows.nonEmpty && rows.head.length == 2, "header is not `k dim`")
+      val Array(k, dim) = rows.head.map(_.toInt)
+      require(rows.length == k + 2, s"${rows.length - 1} lines, not a mean and $k components")
+      require(rows.tail.forall(_.length == dim), s"a line without $dim values")
+      Pca(rows(1), rows.drop(2).toArray)
+    }
 
   def buildOrLoad(spark: SparkSession, corpus: DataFrame, k: Int,
                   path: String, embCol: String = "embedding"): Pca =

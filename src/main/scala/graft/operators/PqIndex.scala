@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *  - TRAIN is `m` independent sample-scale KMeans fits (driver-side
   *    model, executor-scale data — same posture as [[IvfIndex.train]];
   *    at 100 TB you train on a sample, which is exactly what FAISS does).
+  *    The fits run concurrently on driver threads: each is a chain of
+  *    ~21 tiny barrier jobs whose driver-side gaps would otherwise idle
+  *    the executors `m` times over. The results are identical to fitting
+  *    one subspace after another (same seeds, same persisted input).
   *  - ENCODE is a narrow per-row map: `m` [[graft.functions.NearestCentroidF32]]
   *    argmins over embedding slices — codegen'd, no shuffle; the encoded
   *    corpus is `m` ints per row instead of `dim` floats (PQ8x16 on a
@@ -45,39 +49,114 @@ object PqIndex {
   }
 
   /** Train per-subspace codebooks (KMeans on embedding slices). `dim`
-    * must divide evenly into `m` subspaces.
+    * must divide evenly into `m` subspaces, and every row must have it.
     *
     * The training projection is persisted for the duration of the `m`
-    * fits: without it, every fit (plus the row count and the dim probe)
+    * fits: without it, every fit (plus the up-front size aggregate)
     * re-materializes the caller's full lineage — for the IVFADC path
     * that lineage is read → cell assign → residual, so ~10 corpus-scale
     * passes to fit codebooks on a sample (measured 56 s vs 14 s on a 2M-row
     * probe with a 100k sample). The cache holds only the projected
-    * vector column at sample scale (~tens of MB), not the corpus. */
+    * vector column at sample scale (~tens of MB), not the corpus.
+    *
+    * The fits run concurrently (see [[fitAll]]); each is the same seeded
+    * KMeans over the same persisted, identically partitioned projection
+    * as in a sequential loop, so the codebooks are bit-identical to it.
+    * Every fit ends before the projection is unpersisted, failed or not,
+    * and the first failure (in subspace order) is rethrown as itself. */
   def train(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
             embCol: String = "embedding"): Pq = {
+    val sc = corpus.sparkSession.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
     val vecs = corpus.select(col(embCol).as("__emb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var failed = true
     try {
-      val n = vecs.count()
-      if (n < IvfIndex.TrainMin) Pq(None, m, ksub)
-      else {
-        val dim = vecs.select(size(col("__emb"))).first().getInt(0)
-        require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-        val dsub = dim / m
-        val k = math.min(ksub, n).toInt
-        val books = (0 until m).map { s =>
-          val sliced = vecs.select(
-            array_to_vector(slice(col("__emb"), s * dsub + 1, dsub)).as("__features"))
-          new KMeans()
-            .setK(k).setSeed(Seed + s).setMaxIter(10)
-            .setFeaturesCol("__features").setPredictionCol("__code")
-            .fit(sliced)
-            .clusterCenters.map(_.toArray)
-        }.toArray
-        Pq(Some(books), m, ksub)
+      val stats = vecs.agg(count(lit(1)), min(size(col("__emb"))),
+        max(size(col("__emb")))).head()
+      val n = stats.getLong(0)
+      val pq =
+        if (n < IvfIndex.TrainMin) Pq(None, m, ksub)
+        else {
+          val (dim, longest) = (stats.getInt(1), stats.getInt(2))
+          require(dim == longest,
+            s"embeddings differ in size ($dim and $longest); PQ needs one dim")
+          require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+          val dsub = dim / m
+          val k = math.min(ksub, n).toInt
+          val books = fitAll(m) { s =>
+            val sliced = vecs.select(
+              array_to_vector(slice(col("__emb"), s * dsub + 1, dsub)).as("__features"))
+            new KMeans()
+              .setK(k).setSeed(Seed + s).setMaxIter(10)
+              .setFeaturesCol("__features").setPredictionCol("__code")
+              .fit(sliced)
+              .clusterCenters.map(_.toArray)
+          }
+          Pq(Some(books), m, ksub)
+        }
+      failed = false
+      pq
+    } finally {
+      vecs.unpersist(false)
+      // Spark ML's KMeans unpersists its own caches only when it
+      // succeeds; after a failed fit drop every RDD persisted during
+      // this call (all fits have ended, so none is in use by them; an
+      // RDD another thread persisted meanwhile would only be recomputed)
+      if (failed) sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!cachedBefore(id)) rdd.unpersist(false)
       }
-    } finally vecs.unpersist(false)
+    }
+  }
+
+  /** Driver threads for the concurrent sub-quantizer fits. Each KMeans
+    * fit is a chain of ~21 tiny barrier jobs (k-means|| init plus 10
+    * Lloyd iterations), so run one after another the executors idle
+    * through every job's driver-side gap; run together, one fit's gap
+    * overlaps another's tasks. Measured on a 4-vCPU host at `local[2]`
+    * (600 64-d residuals, m = 8, ksub = 16): a traced build took
+    * `pqindex.train` from 12.4 s to 7.7 s and its driver gap from 6.2 s
+    * to 1.0 s, all 171 jobs still in the caller's group (172 before:
+    * the up-front aggregate saves one); the IVF-PQ build (`index_build_s`) fell from a median
+    * of 18.4 s to 14.3 s over ten pairs, while a cap of 4 threads gave
+    * 15.5–16.2 s on three of those seeds. */
+  private val MaxFitThreads = 8
+
+  /** `fit(0 until n)` on up to [[MaxFitThreads]] daemon threads, results
+    * in index order. The threads are created here, on the calling
+    * thread, so they inherit its Spark local properties (job group,
+    * description, scheduler pool): their jobs stay attributed to the
+    * caller. Every started fit ends before this returns, even when
+    * another fails or the caller is interrupted; after a failure no new
+    * fit starts, and the first failure in index order is rethrown. */
+  private def fitAll[T: scala.reflect.ClassTag](n: Int)(fit: Int => T): Array[T] = {
+    val out = new Array[T](n)
+    val errors = new Array[Throwable](n)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threads = Array.tabulate(math.min(n, MaxFitThreads)) { t =>
+      val th = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < n) {
+          try out(i) = fit(i)
+          catch { case e: Throwable => errors(i) = e; next.set(n) }
+          i = next.getAndIncrement()
+        }
+      }, s"pqindex-fit-$t")
+      th.setDaemon(true)
+      th
+    }
+    try threads.foreach(_.start())
+    finally {
+      var interrupted = false
+      threads.foreach { th =>
+        while (th.isAlive)
+          try th.join()
+          catch { case _: InterruptedException => interrupted = true; next.set(n) }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    errors.find(_ != null).foreach(e => throw e)
+    out
   }
 
   /** Encode every row: `codes` = array of `m` sub-centroid argmins (the
@@ -101,43 +180,37 @@ object PqIndex {
   // -------------------------------------------------------------------
   // Codebook persistence — same tiny-text-artifact lifecycle as
   // IvfIndex.save/load (S4 posture): header `m ksub dsub`, then the
-  // m·ksub centroid lines in subspace-major order. Double.toString
+  // m·k centroid lines (k ≤ ksub) in subspace-major order. Double.toString
   // round-trips exactly, so a reloaded index encodes identically.
   // -------------------------------------------------------------------
 
   def save(spark: SparkSession, pq: Pq, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      pq.codebooks match {
-        case None => sb.append(s"${pq.m} ${pq.ksub} 0\n")
-        case Some(books) =>
-          sb.append(s"${pq.m} ${pq.ksub} ${books(0)(0).length}\n")
-          books.foreach(_.foreach { c =>
-            sb.append(c.mkString(" ")).append('\n')
-          })
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
+    val sb = new StringBuilder
+    pq.codebooks match {
+      case None => sb.append(s"${pq.m} ${pq.ksub} 0\n")
+      case Some(books) =>
+        sb.append(s"${pq.m} ${pq.ksub} ${books(0)(0).length}\n")
+        books.foreach(_.foreach { c =>
+          sb.append(c.mkString(" ")).append('\n')
+        })
+    }
+    IvfIndex.writeArtifact(spark, path, sb.toString)
   }
 
-  def load(spark: SparkSession, path: String): Pq = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try {
-      val Array(m, ksub, dsub) = in.readLine().split(" ").map(_.toInt)
+  def load(spark: SparkSession, path: String): Pq =
+    IvfIndex.readArtifact(spark, path) { rows =>
+      require(rows.nonEmpty && rows.head.length == 3, "header is not `m ksub dsub`")
+      val Array(m, ksub, dsub) = rows.head.map(_.toInt)
+      require(m > 0, s"m = $m")
       if (dsub == 0) Pq(None, m, ksub)
       else {
-        val flat = Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .map(_.split(" ").map(_.toDouble)).toArray
+        val flat = rows.tail.toArray
+        require(flat.nonEmpty && flat.length % m == 0,
+          s"${flat.length} codebook lines do not split into $m subspaces")
+        require(flat.forall(_.length == dsub), s"a codebook line without $dsub values")
         Pq(Some(flat.grouped(flat.length / m).toArray), m, ksub)
       }
-    } finally in.close()
-  }
+    }
 
   def buildOrLoad(spark: SparkSession, corpus: DataFrame, m: Int, ksub: Int,
                   path: String, embCol: String = "embedding"): Pq =

@@ -414,35 +414,28 @@ object SqIndex {
   // -------------------------------------------------------------------
 
   def save(spark: SparkSession, sq: Sq, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      (sq.vmin, sq.step) match {
-        case (Some(vmin), Some(step)) =>
-          sb.append(s"${vmin.length}\n")
-          sb.append(vmin.mkString(" ")).append('\n')
-          sb.append(step.mkString(" ")).append('\n')
-        case _ => sb.append("0\n")
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
+    val sb = new StringBuilder
+    (sq.vmin, sq.step) match {
+      case (Some(vmin), Some(step)) =>
+        sb.append(s"${vmin.length}\n")
+        sb.append(vmin.mkString(" ")).append('\n')
+        sb.append(step.mkString(" ")).append('\n')
+      case _ => sb.append("0\n")
+    }
+    IvfIndex.writeArtifact(spark, path, sb.toString)
   }
 
-  def load(spark: SparkSession, path: String): Sq = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try {
-      val dim = in.readLine().trim.toInt
+  def load(spark: SparkSession, path: String): Sq =
+    IvfIndex.readArtifact(spark, path) { rows =>
+      require(rows.nonEmpty && rows.head.length == 1, "header is not `dim`")
+      val dim = rows.head(0).toInt
       if (dim == 0) Sq(None, None)
-      else Sq(
-        Some(in.readLine().split(" ").map(_.toDouble)),
-        Some(in.readLine().split(" ").map(_.toDouble)))
-    } finally in.close()
-  }
+      else {
+        require(rows.length == 3 && rows.tail.forall(_.length == dim),
+          s"not a vmin and a step line of $dim values")
+        Sq(Some(rows(1)), Some(rows(2)))
+      }
+    }
 
   def buildOrLoad(spark: SparkSession, corpus: DataFrame, path: String,
                   embCol: String = "embedding"): Sq =

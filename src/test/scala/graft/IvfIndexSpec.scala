@@ -57,6 +57,16 @@ class IvfIndexSpec extends AnyFunSuite {
     // buildOrLoad takes the load path (no retrain) once the file exists
     assert(IvfIndex.buildOrLoad(spark, corpus, 8, path).centroids.get.head.toSeq ==
       ivf.centroids.get.head.toSeq)
+    // the save leaves no temp sibling; a truncated quantizer fails naming its path
+    val dir = new java.io.File(path).getParentFile
+    assert(!dir.list().exists(_.startsWith("_")), dir.list().toSeq)
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8")
+    val cut = s"$dir/cut.txt"
+    java.nio.file.Files.write(java.nio.file.Paths.get(cut),
+      text.take(text.length / 2).getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](IvfIndex.load(spark, cut))
+    assert(e.getMessage.contains(cut), e.getMessage)
   }
 
   test("filtered search: metadata predicate lands in the SAME pruned scan") {

@@ -1,8 +1,15 @@
 package graft
 
 import graft.operators.PqIndex
+import org.apache.spark.SparkException
+import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class PqIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -16,6 +23,137 @@ class PqIndexSpec extends AnyFunSuite {
     (0 until n).map { i =>
       val a = anchors(i % nClusters)
       (i.toLong, a.map(x => x + r.nextGaussian().toFloat * 0.05f))
+    }
+  }
+
+  /** `clustered` as a 3-partition frame: the fits' k-means|| sampling is
+    * per partition, so bit-identity is only meaningful across several. */
+  private def partitioned(n: Int, nClusters: Int): DataFrame =
+    spark.sparkContext.parallelize(clustered(n, nClusters), 3)
+      .toDF("doc_id", "embedding")
+
+  /** The sequential reference for [[PqIndex.train]]: the same
+    * per-subspace KMeans fits, one after another, over the same
+    * persisted projection. */
+  private def sequentialBooks(df: DataFrame, m: Int, ksub: Int,
+                              embCol: String = "embedding"): Array[Array[Array[Double]]] = {
+    val vecs = df.select(col(embCol).as("__emb")).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = vecs.count()
+      val dsub = vecs.select(size(col("__emb"))).first().getInt(0) / m
+      (0 until m).map { s =>
+        new KMeans()
+          .setK(math.min(ksub, n).toInt).setSeed(PqIndex.Seed + s).setMaxIter(10)
+          .setFeaturesCol("__features").setPredictionCol("__code")
+          .fit(vecs.select(
+            array_to_vector(slice(col("__emb"), s * dsub + 1, dsub)).as("__features")))
+          .clusterCenters.map(_.toArray)
+      }.toArray
+    } finally vecs.unpersist(false)
+  }
+
+  private def sameBooks(a: Array[Array[Array[Double]]], b: Array[Array[Array[Double]]]) =
+    java.util.Arrays.deepEquals(a.asInstanceOf[Array[AnyRef]], b.asInstanceOf[Array[AnyRef]])
+
+  private def fitThreadsAlive: Boolean = Thread.getAllStackTraces.keySet.asScala
+    .exists(t => t.getName.startsWith("pqindex-fit-") && t.isAlive)
+
+  /** Runs `body` with a job-start listener; returns once the listener has
+    * seen every job `body` started (a later marker job's start is
+    * delivered after them). */
+  private def withJobStarts[T](onStart: SparkListenerJobStart => Unit)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = "pq-spec-marker"
+    val sawMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == marker) sawMarker.countDown()
+        else onStart(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = try body finally {
+        sc.setJobGroup(marker, "listener barrier")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      }
+      assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("concurrent sub-quantizer fits give the sequential codebooks bit for bit") {
+    val docs = partitioned(300, 8)
+    assert(docs.rdd.getNumPartitions >= 3)
+    for (m <- Seq(4, 8)) {
+      val pq = PqIndex.train(docs, m = m, ksub = 8)
+      assert(sameBooks(pq.codebooks.get, sequentialBooks(docs, m, 8)), s"m = $m")
+    }
+    // two trainings at once (each with its own fit threads) still agree
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val both = Await.result(Future.sequence(Seq.fill(2)(Future(
+      PqIndex.train(docs, m = 8, ksub = 8).codebooks.get))),
+      scala.concurrent.duration.Duration(10, "min"))
+    assert(sameBooks(both(0), both(1)))
+    assert(sameBooks(both(0), sequentialBooks(docs, 8, 8)))
+  }
+
+  test("buildIvfAdc's residual codebooks equal the sequential reference") {
+    import graft.operators.IvfIndex
+    val docs = partitioned(300, 8)
+    val (withCells, ivf) = IvfIndex.build(docs, nlist = 8)
+    val (_, pq) = PqIndex.buildIvfAdc(withCells, ivf, m = 4, ksub = 8)
+    val withRes = withCells.withColumn("__res",
+      PqIndex.residualColumn(ivf, col("embedding"), col("cell_id")))
+    assert(sameBooks(pq.codebooks.get, sequentialBooks(withRes, 4, 8, "__res")))
+  }
+
+  test("train: every job carries the caller's job group; no fit thread outlives it") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val pq = withJobStarts { e =>
+      // a streaming query left running elsewhere is not this call's work
+      if (e.properties.getProperty("sql.streaming.queryId") == null)
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    } {
+      sc.setJobGroup("pq-spec", "PqIndex.train attribution")
+      try PqIndex.train(partitioned(300, 8), m = 4, ksub = 8)
+      finally sc.clearJobGroup()
+    }
+    assert(!fitThreadsAlive, "a fit thread outlived train")
+    assert(pq.isTrained)
+    val seen = groups.asScala.toSeq
+    assert(seen.size > 4, s"expected the fits' jobs, saw ${seen.size}")
+    assert(seen.forall(_ == "pq-spec"), s"jobs outside the caller's group: ${seen.distinct}")
+  }
+
+  test("a failed fit: Spark's own exception, no fit thread left, no cache left") {
+    val sc = spark.sparkContext
+    val docs = partitioned(300, 8)
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    // cancel the group at every KMeans job start, so a fit job is surely
+    // active when a cancel lands (a plain cancel only hits active jobs)
+    val err = withJobStarts { e =>
+      if (e.properties.getProperty("spark.jobGroup.id") == "pq-spec" &&
+          e.stageInfos.exists(_.name.contains("KMeans")))
+        sc.cancelJobGroup("pq-spec")
+    } {
+      sc.setJobGroup("pq-spec", "PqIndex.train failure")
+      try intercept[SparkException](PqIndex.train(docs, m = 4, ksub = 8))
+      finally sc.clearJobGroup()
+    }
+    assert(err.getMessage.contains("cancelled"), err.getMessage)
+    assert(!fitThreadsAlive, "a fit thread outlived the failed train")
+    assert(sc.getPersistentRDDs.keySet == cachedBefore)
+  }
+
+  test("train rejects embeddings of mixed sizes, naming both") {
+    for (odd <- Seq(20, 12)) {
+      val rows = clustered(150, 4) :+ ((999L, Array.fill(odd)(1f)))
+      val e = intercept[IllegalArgumentException](
+        PqIndex.train(rows.toDF("doc_id", "embedding"), m = 4, ksub = 8))
+      assert(e.getMessage.contains("16") && e.getMessage.contains(odd.toString),
+        e.getMessage)
     }
   }
 
@@ -41,6 +179,20 @@ class PqIndexSpec extends AnyFunSuite {
     val b = PqIndex.encode(docs, re).select("doc_id", "codes")
       .as[(Long, Seq[Int])].collect().toMap
     assert(a == b)
+    // saving over the artifact leaves no temp sibling
+    PqIndex.save(spark, pq, path)
+    val dir = new java.io.File(path).getParentFile
+    assert(!dir.list().exists(n => n.startsWith("_") || n.startsWith("._")), dir.list().toSeq)
+    // a truncated artifact fails naming its path: cut mid-line, and cut at
+    // a line end leaving 5 codebook lines for m = 4
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8")
+    for (cut <- Seq(text.length / 2, text.split('\n').take(6).map(_.length + 1).sum)) {
+      val bad = s"$dir/cut-$cut.txt"
+      java.nio.file.Files.write(java.nio.file.Paths.get(bad), text.take(cut).getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException](PqIndex.load(spark, bad))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
   }
 
   test("ADC search finds the query's own cluster; column matches driver LUT") {
