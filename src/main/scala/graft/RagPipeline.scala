@@ -73,14 +73,8 @@ object RagPipeline {
         VectorSearch.knnSingle(embedded, qVec, r.topK)
       case "flat_l2" =>
         // distance-ranked top-k, similarity = 1/(1+d) (F1)
-        val top = embedded
-          .select(col("doc_id"),
-            GraftFunctions.l2Similarity(
-              GraftFunctions.l2DistanceF32(col("embedding"), typedLit(qVec))).as("score"))
-          .orderBy(desc("score"), col("doc_id").asc)
-          .limit(r.topK)
-        embedded.join(broadcast(top), Seq("doc_id"))
-          .orderBy(desc("score"), col("doc_id").asc)
+        VectorSearch.topK(embedded, GraftFunctions.l2Similarity(
+          GraftFunctions.l2DistanceF32(col("embedding"), typedLit(qVec))), r.topK, "doc_id")
       case other => throw new IllegalArgumentException(
         s"indexType '$other' not supported here (ivf: build with IvfIndex and call IvfIndex.search)")
     }

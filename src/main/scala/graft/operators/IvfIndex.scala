@@ -515,7 +515,8 @@ object IvfIndex {
       .limit(k)
   }
 
-  /** IVF search: prune to probed cells, then exact top-k inside them. */
+  /** IVF search: prune to probed cells, then exact top-k with the hit rows
+    * inside them ([[VectorSearch.knnSingle]]: one job over the pruned scan). */
   def search(corpusWithCells: DataFrame, ivf: Ivf, queryVec: Array[Float],
              k: Int, nprobe: Int, embCol: String = "embedding",
              idCol: String = "doc_id"): DataFrame = {
@@ -525,8 +526,8 @@ object IvfIndex {
     VectorSearch.knnSingle(pruned, queryVec, k, embCol, idCol)
   }
 
-  /** Narrow IVF search returning only `(idCol, score)` — skips the
-    * fetch-back join when hit payloads aren't needed. */
+  /** Narrow IVF search returning only `(idCol, score)`
+    * ([[VectorSearch.knnScores]]) for callers that compose it further. */
   def searchScores(corpusWithCells: DataFrame, ivf: Ivf, queryVec: Array[Float],
                    k: Int, nprobe: Int, embCol: String = "embedding",
                    idCol: String = "doc_id"): DataFrame = {

@@ -20,25 +20,28 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object VectorSearch {
 
-  /** Single-query exact top-k: scan + codegen dot + TakeOrderedAndProject
-    * (partial top-k per partition, merge at driver — no shuffle). Mirrors
-    * `index.search(query, k)` at `components/core/index_service.py:205-235`
-    * including the `k = min(k, ntotal)` clamp (`limit` is naturally
-    * clamping). */
+  /** Single-query exact top-k: `(idCol, the other corpus columns, score)`
+    * in `(score DESC, id ASC)` order as ONE TakeOrderedAndProject job
+    * (partial top-k per partition, merge at the driver; one scan, no
+    * exchange or broadcast, and a pruned `corpus` keeps its pruned scan).
+    * Mirrors `index.search(query, k)` at `components/core/index_service.py:205-235`
+    * including the `k = min(k, ntotal)` clamp (`limit` is naturally clamping). */
   def knnSingle(corpus: DataFrame, queryVec: Array[Float], k: Int,
-                embCol: String = "embedding", idCol: String = "doc_id"): DataFrame = {
-    // Two-phase: narrow top-k then one broadcast join back for the k full
-    // rows — the output contract is always corpus columns + score.
-    val top = knnScores(corpus, queryVec, k, embCol, idCol)
-    corpus.join(broadcast(top), Seq(idCol))
-      .orderBy(desc("score"), col(idCol).asc)
+                embCol: String = "embedding", idCol: String = "doc_id"): DataFrame =
+    topK(corpus, GraftFunctions.dotF32(col(embCol), typedLit(queryVec)), k, idCol)
+
+  /** [[knnSingle]]'s plan for any score column (flat_l2 shares it). */
+  private[graft] def topK(corpus: DataFrame, score: Column, k: Int, idCol: String): DataFrame = {
+    GraftFunctions.register(corpus.sparkSession)
+    val rest = corpus.columns.toSeq.filterNot(_ == idCol).map(col)
+    corpus.select(col(idCol) +: rest :+ score.as("score"): _*)
+      .orderBy(desc("score"), col(idCol).asc).limit(k)
   }
 
-  /** Single-query exact top-k returning ONLY `(idCol, score)` — the narrow
-    * form of [[knnSingle]] without the fetch-back join. Top-k runs over
-    * narrow rows because TakeOrderedAndProject copies every candidate row
-    * per partition (carrying an embedding or document text through it costs
-    * ~10×). Use this when hit payloads aren't needed. */
+  /** Single-query exact top-k returning ONLY `(idCol, score)`: it stays
+    * narrow because callers compose it into larger plans (joins, unions,
+    * recall references), where each extra column rides through every
+    * downstream operator. [[knnSingle]] returns the hit rows. */
   def knnScores(corpus: DataFrame, queryVec: Array[Float], k: Int,
                 embCol: String = "embedding", idCol: String = "doc_id"): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)

@@ -25,11 +25,10 @@ object EventLog {
       } ++
       Seq(("retrieval_complete", queryId,
         s"""{"final_threshold": ${stats.final_threshold}, "final_hits": ${stats.final_hits}, "attempts": ${stats.attempts}, "target_reached": ${stats.target_reached}}"""))
-    rows.toDF("event_type", "query_id", "data")
-      .withColumn("ts", current_timestamp())
-      .withColumn("agent_id", lit(null).cast("string"))
-      .withColumn("task_id", lit(null).cast("int"))
-      .select("event_type", "ts", "agent_id", "task_id", "query_id", "data")
+    // one select: each Dataset step is analyzed as it is built, per question
+    rows.toDF("event_type", "query_id", "data").select(col("event_type"),
+      current_timestamp().as("ts"), lit(null).cast("string").as("agent_id"),
+      lit(null).cast("int").as("task_id"), col("query_id"), col("data"))
   }
 
   /** Append events to the events table path. */

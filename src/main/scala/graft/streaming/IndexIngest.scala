@@ -104,6 +104,8 @@ object IndexIngest {
 
   private[graft] val corpusFold = BatchStore.Fold((rows, stage) =>
     rows.repartition(col("cell_id"))
+      // a total order (rows are distinct): byte-reproducible cell files
+      .sortWithinPartitions(col("cell_id") +: rows.columns.toSeq.filterNot(_ == "cell_id").map(col): _*)
       .write.mode("overwrite").partitionBy("cell_id").parquet(stage))
 
   /** Per-batch health history

@@ -147,6 +147,36 @@ class IndexIngestSpec extends AnyFunSuite {
     assert(IndexIngest.loadStats(spark, s"$dir/stats").count() == 6L)
   }
 
+  test("compaction is byte-reproducible: the same rows give the same cell files") {
+    val train = clustered(0 until 300, 6).toDF("doc_id", "embedding")
+    val ivf = IvfIndex.train(train, nlist = 6)
+    val (_, pq) = PqIndex.buildIvfAdc(IvfIndex.assign(train, ivf), ivf, m = 4, ksub = 8)
+    val slices = (0 until 4).map(b => clustered((600 + b * 40) until (640 + b * 40), 6))
+    // store `a`, a byte copy of it, and the same rows ingested in reverse order
+    def ingest(root: String, order: Seq[Seq[(Long, Array[Float])]]): Unit =
+      order.zipWithIndex.foreach { case (rows, b) =>
+        IndexIngest.ingestBatch(rows.toDF("doc_id", "embedding"), b.toLong, ivf, pq,
+          s"$root/corpus", s"$root/stats", "doc_id", "embedding")
+      }
+    val tmp = java.nio.file.Files.createTempDirectory("ingest-repro")
+    val roots = Seq("a", "copy", "reversed").map(n => tmp.resolve(n))
+    ingest(roots(0).toString, slices)
+    org.apache.commons.io.FileUtils.copyDirectory(roots(0).toFile, roots(1).toFile)
+    ingest(roots(2).toString, slices.reverse)
+    roots.foreach(r => IndexIngest.compactQuantizedCorpus(spark, s"$r/corpus"))
+    def cellFiles(root: java.nio.file.Path): Map[String, String] = {
+      val gen = root.resolve("corpus/batch=-1").toFile
+      gen.listFiles().filter(_.getName.startsWith("cell_id=")).map { cell =>
+        val Array(f) = cell.listFiles().filter(_.getName.endsWith(".parquet"))
+        cell.getName -> java.security.MessageDigest.getInstance("MD5")
+          .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      }.toMap
+    }
+    val want = cellFiles(roots(0))
+    assert(want.size > 1)
+    roots.tail.foreach(r => assert(cellFiles(r) == want, s"$r differs from ${roots(0)}"))
+  }
+
   test("retrying a batch id is an idempotent overwrite") {
     val trainSet = clustered(0 until 300, 6)
     val train = trainSet.toDF("doc_id", "embedding")

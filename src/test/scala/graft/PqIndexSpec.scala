@@ -4,7 +4,6 @@ import graft.operators.PqIndex
 import org.apache.spark.SparkException
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -13,6 +12,7 @@ import scala.jdk.CollectionConverters._
 
 class PqIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
+  import SparkTestBase.withJobStarts
   import spark.implicits._
 
   /** Clustered corpus: `nClusters` anchors, members jittered tightly
@@ -57,29 +57,6 @@ class PqIndexSpec extends AnyFunSuite {
 
   private def fitThreadsAlive: Boolean = Thread.getAllStackTraces.keySet.asScala
     .exists(t => t.getName.startsWith("pqindex-fit-") && t.isAlive)
-
-  /** Runs `body` with a job-start listener; returns once the listener has
-    * seen every job `body` started (a later marker job's start is
-    * delivered after them). */
-  private def withJobStarts[T](onStart: SparkListenerJobStart => Unit)(body: => T): T = {
-    val sc = spark.sparkContext
-    val marker = "pq-spec-marker"
-    val sawMarker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == marker) sawMarker.countDown()
-        else onStart(e)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = try body finally {
-        sc.setJobGroup(marker, "listener barrier")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      }
-      assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      out
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("concurrent sub-quantizer fits give the sequential codebooks bit for bit") {
     val docs = partitioned(300, 8)

@@ -59,6 +59,25 @@ class RagPipelineSpec extends AnyFunSuite {
     assert(res.docs.map(_.score) == res.docs.map(_.score).sorted.reverse)
   }
 
+  test("a question over a validated corpus is one Spark job") {
+    val sc = spark.sparkContext
+    val path = java.nio.file.Files.createTempDirectory("graft-rag-jobs").toString + "/corpus"
+    corpus.write.parquet(path)
+    val pre = RagPipeline.embedCorpus(spark.read.parquet(path))
+    val config = GraftConfig(retrieval = RetrievalConfig(topK = 3, hitTarget = 2))
+    val first = RagPipeline.query(spark, pre, "vector search retrieval", config)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val again = SparkTestBase.withJobStarts { e =>
+      if (e.properties.getProperty("spark.jobGroup.id") == "rag-spec") jobs.incrementAndGet()
+    } {
+      sc.setJobGroup("rag-spec", "RagPipeline.query job count")
+      try RagPipeline.query(spark, pre, "vector search retrieval", config)
+      finally sc.clearJobGroup()
+    }
+    assert(again.docs == first.docs)
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs for one question")
+  }
+
   test("dimension mismatch on pre-embedded corpus fails loudly; bad indexType rejected") {
     val pre = RagPipeline.embedCorpus(corpus, dim = 32)
     val ex = intercept[IllegalArgumentException] {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -18,5 +19,29 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(s)
     s
+  }
+
+  /** Runs `body` with a job-start listener; returns once the listener has
+    * seen every job `body` started (a later marker job's start is
+    * delivered after them). */
+  def withJobStarts[T](onStart: SparkListenerJobStart => Unit)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = s"spec-listener-marker-${java.util.UUID.randomUUID}"
+    val sawMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == marker) sawMarker.countDown()
+        else onStart(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = try body finally {
+        sc.setJobGroup(marker, "listener barrier")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      }
+      require(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener barrier job was never seen")
+      out
+    } finally sc.removeSparkListener(listener)
   }
 }

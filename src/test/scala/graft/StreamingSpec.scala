@@ -220,7 +220,8 @@ class StreamingSpec extends AnyFunSuite {
   test("EventLog emits the retrieval lifecycle matching the stats") {
     val stats = graft.operators.VectorSearch.dynamicThresholdSelect(
       Seq(0.92, 0.87, 0.81, 0.4), hitTarget = 3, step = 0.05)
-    val ev = graft.streaming.EventLog.retrievalEvents(spark, 7L, stats).collect()
+    val events = graft.streaming.EventLog.retrievalEvents(spark, 7L, stats)
+    val ev = events.collect()
     assert(ev.head.getString(0) == "retrieval_start")
     assert(ev.last.getString(0) == "retrieval_complete")
     assert(ev.count(_.getString(0) == "threshold_attempt") == stats.attempts)
@@ -228,6 +229,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(ev.forall(_.getLong(4) == 7L))
     assert(ev.head.schema.fieldNames.toSeq ==
       Seq("event_type", "ts", "agent_id", "task_id", "query_id", "data"))
+    import org.apache.spark.sql.types._
+    assert(events.schema == StructType(Seq(
+      StructField("event_type", StringType), StructField("ts", TimestampType, nullable = false),
+      StructField("agent_id", StringType), StructField("task_id", IntegerType),
+      StructField("query_id", LongType, nullable = false), StructField("data", StringType))),
+      events.schema.treeString)
   }
 
   test("flatMapGroupsWithState sessionization closes sessions on gap") {

@@ -32,6 +32,48 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(VectorSearch.knnSingle(corpus.limit(3), randVec(7), 10).count() == 3)
   }
 
+  /** 30 rows in 3 partitions of 10: ids 5, 15, 25 hold the query itself
+    * (an exact top-score tie across all three partitions), ids 8 and 18
+    * share a vector (a mid-rank tie), id 12 has a null embedding. */
+  private def tiedCorpus(q: Array[Float]) = {
+    val rows = (0 until 30).map { i =>
+      val v = if (i % 10 == 5) q else if (i == 8 || i == 18) randVec(8) else randVec(i)
+      (i.toLong, if (i == 12) null else v, s"text $i")
+    }
+    spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "embedding", "text")
+  }
+
+  /** The two-phase plan `knnSingle` had: narrow top-k, broadcast join
+    * back to the corpus, range sort. */
+  private def twoPhase(corpus: org.apache.spark.sql.DataFrame, q: Array[Float], k: Int) =
+    corpus.join(broadcast(VectorSearch.knnScores(corpus, q, k)), Seq("doc_id"))
+      .orderBy(desc("score"), col("doc_id").asc)
+
+  test("knnSingle equals the two-phase plan: rows, order, schema") {
+    val q = randVec(999)
+    val corpus = tiedCorpus(q)
+    assert(corpus.rdd.getNumPartitions == 3)
+    for (k <- Seq(0, 2, 3, 10, 29, 30, 45)) {
+      val got = VectorSearch.knnSingle(corpus, q, k)
+      val want = twoPhase(corpus, q, k)
+      assert(got.schema == want.schema, s"k = $k")
+      assert(got.collect().toSeq == want.collect().toSeq, s"k = $k")
+    }
+    // the planted tie breaks by id, and the null score ranks last
+    val all = VectorSearch.knnSingle(corpus, q, 45).select("doc_id").as[Long].collect()
+    assert(all.take(3).toSeq == Seq(5L, 15L, 25L) && all.last == 12L)
+    assert(all.indexOf(8L) + 1 == all.indexOf(18L))
+  }
+
+  test("knnSingle runs as one TakeOrderedAndProject: no exchange, no broadcast") {
+    val q = randVec(999)
+    val hits = VectorSearch.knnSingle(tiedCorpus(q), q, 5)
+    hits.collect()
+    val plan = hits.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Exchange") && !plan.contains("BroadcastHashJoin"), plan)
+  }
+
   test("knnBatch and knnBatchAggregated agree") {
     val queries = (900 to 903).map(i => (i.toLong, randVec(i)))
       .toDF("query_id", "q_embedding")
