@@ -1639,7 +1639,8 @@ object ScaleProbe {
         pqrCorpus, ivf, pqr1, pqr2, qVec, 10, 50, nprobe).collect())
 
     // Batched IVFADC: 8 queries through ONE union-of-probed-cells scan
-    // (broadcast (query, cell, slot) join + bounded-aggregator top-k)
+    // job (literal cell → (query, slot) fan-out, per-partition top-k
+    // merged on the driver; the call is eager, its `collect` is local)
     // vs the 8-job sequential loop — the q109 path's scale claim.
     val batchQs = base.filter(col("vec_id") < 8)
       .select("vec_id", "embedding").collect()

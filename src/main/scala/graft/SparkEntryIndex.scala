@@ -734,9 +734,10 @@ private[graft] trait SparkEntryIndex { this: SparkEntry.type =>
 
   /** Batched IVFADC ([[PqIndex.searchIvfAdcBatch]]): FAISS
     * `IndexIVFPQ::search` driven the way FAISS is actually driven — a
-    * query matrix. One scan of the UNION of probed cells; each row joins
-    * only the queries probing its cell; per-query top-k through the
-    * bounded aggregator (partial top-k before the exchange). */
+    * query matrix. One scan job over the UNION of probed cells; a literal
+    * cell → (query, slot) map fans each row out to the queries probing
+    * its cell; each partition keeps at most k hits per query, merged on
+    * the driver. No exchange, no broadcast. */
   private[graft] def q109IvfAdcBatch(s: SparkSession, dir: String): DataFrame = {
     val (encoded, ivf, pq) = ivfAdcCorpus(s, dir)
     val queries = t(s, dir, "embeddings").filter(col("vec_id") < 6)

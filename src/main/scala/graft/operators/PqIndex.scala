@@ -3,8 +3,10 @@ package graft.operators
 import graft.functions.GraftFunctions
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Product quantization — the FAISS-core compression the reference's
   * engine family is named for (IndexPQ / IVFADC; Jégou et al. 2011,
@@ -423,53 +425,84 @@ object PqIndex {
       .take(nprobe).map(_._2).toSeq
 
   /** Batched IVFADC — FAISS `IndexIVFPQ::search` over a query BATCH,
-    * which is how FAISS is actually driven (`xq` is a matrix). The
-    * engine's batch searches share ONE scan: the union of every query's
-    * probed cells is read once (still a static partition filter), each
-    * scanned row joins only the queries probing its cell (broadcast
-    * (query, cell, slot) table — n_q·nprobe rows), the per-row cost is
-    * `m` lookups into that pair's LUT, and per-query top-k goes through
-    * the bounded [[TopKByScore]] aggregator (the
-    * `knnBatchAggregated` shape, measured 3× the window form): partial
-    * top-k BEFORE the exchange, so the shuffle carries O(k · partitions)
-    * rows per query, never the scored scan. LUT literal is
-    * O(n_q · nprobe · m · ksub) — slot-addressed, never O(nlist). */
+    * which is how FAISS is actually driven (`xq` is a matrix, and each
+    * query keeps a bounded heap through one pass over the probed lists).
+    *
+    * ONE Spark job, no exchange, no broadcast ([[ivfAdcBatchScan]] is the
+    * scan): the union of every query's probed cells is read once (a
+    * static `cell_id IN (…)` partition filter), each scanned row fans out
+    * to the queries probing its cell through a literal
+    * `cell_id → [(query, slot)]` map, and the per-row cost is `m` lookups
+    * into that pair's LUT. Each partition keeps at most `k` hits per
+    * query ([[AdcTopK]]) and the driver merges the partition results as
+    * they finish. Both literals are O(n_q · nprobe) entries (the LUTs
+    * O(n_q · nprobe · m · ksub) values) — slot-addressed, never O(nlist).
+    *
+    * EAGER: the job runs when this is called, and the hits come back as a
+    * local frame (`query_id` long, `idCol` long, `adc` double, `doc_rank`
+    * int from 1); every caller consumes the answer at once. Per query the
+    * order is `adc` ascending, then id ascending, equal hits kept (an id
+    * present in two batch dirs is returned twice) — [[TopKByScore]]'s
+    * order. A query whose probed cells hold no rows returns no rows.
+    * Query ids must be distinct. */
   def searchIvfAdcBatch(encoded: DataFrame, ivf: IvfIndex.Ivf, pq: Pq,
                         queries: Seq[(Long, Array[Float])], k: Int,
                         nprobe: Int, idCol: String = "doc_id"): DataFrame = {
+    require(k > 0, s"k = $k")
     val spark = encoded.sparkSession
-    GraftFunctions.register(spark)
+    import spark.implicits._
+    // Partition results and the driver's merged state are each at most
+    // n_q · k hits, whatever the partition count: `aggregate` folds every
+    // task result into the driver's accumulator as the task finishes.
+    val top = ivfAdcBatchScan(encoded, ivf, pq, queries, nprobe, idCol)
+      .as[(Int, Long, Double)].rdd
+      .aggregate(new AdcTopK(queries.length, k))(
+        (acc, hit) => acc.add(hit._1, hit._2, hit._3), _.merge(_))
+    val rows = queries.indices.flatMap { q =>
+      top.best(q).zipWithIndex.map { case (h, r) =>
+        Row(queries(q)._1, h.id, h.adc, r + 1)
+      }
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("query_id", LongType), StructField(idCol, LongType),
+      StructField("adc", DoubleType), StructField("doc_rank", IntegerType))))
+  }
+
+  /** The scan of [[searchIvfAdcBatch]], lazy: one row per (scanned row,
+    * query probing its cell) — (`query` index into `queries`, `id`, `adc`).
+    * Its plan is a filtered partition scan plus a generator and a
+    * projection: no exchange, no join. */
+  private[graft] def ivfAdcBatchScan(encoded: DataFrame, ivf: IvfIndex.Ivf,
+                                     pq: Pq, queries: Seq[(Long, Array[Float])],
+                                     nprobe: Int, idCol: String): DataFrame = {
+    GraftFunctions.register(encoded.sparkSession)
     VectorSearch.requireIntegralId(encoded, idCol)
+    val ids = queries.map(_._1)
+    val repeated = ids.diff(ids.distinct).headOption
+    require(repeated.isEmpty,
+      s"query id ${repeated.get} appears more than once in the batch")
     val cents = ivf.centroids.getOrElse(
       throw new IllegalStateException("IVFADC needs a trained IVF"))
-    val entries: Seq[(Long, Int)] = queries.flatMap { case (qid, qv) =>
-      probeL2(cents, qv, nprobe).map(cell => (qid, cell))
+    // (query index, cell) per probe; its position is the LUT slot
+    val entries: Seq[(Int, Int)] = queries.zipWithIndex.flatMap { case ((_, qv), q) =>
+      probeL2(cents, qv, nprobe).map(cell => (q, cell))
     }
-    val byId = queries.toMap
-    val luts: Seq[Seq[Seq[Double]]] = entries.map { case (qid, cell) =>
-      val qv = byId(qid)
+    val luts: Seq[Seq[Seq[Double]]] = entries.map { case (q, cell) =>
+      val qv = queries(q)._2
       val c = cents(cell)
       val qr = Array.tabulate(qv.length)(j => (qv(j).toDouble - c(j)).toFloat)
       adcLut(pq, qr).map(_.toSeq).toSeq
     }
-    import spark.implicits._
-    val probeDf = entries.zipWithIndex
-      .map { case ((qid, cell), slot) => (qid, cell, slot) }
-      .toDF("query_id", "cell_id", "__slot")
-    val topk = udaf(new TopKByScore(k))
+    val fanOut: Map[Int, Seq[(Int, Int)]] = entries.zipWithIndex
+      .groupBy(_._1._2)
+      .map { case (cell, es) => cell -> es.map { case ((q, _), slot) => (q, slot) } }
     encoded
-      .filter(col("cell_id").isin(entries.map(_._2).distinct: _*))
-      .join(broadcast(probeDf), "cell_id")
-      .withColumn("adc",
-        GraftFunctions.adcLutCells(col("codes"), col("__slot"), typedLit(luts)))
-      .select(col("query_id"), col(idCol).cast("long").as("id"),
-        negate(col("adc")).as("__negadc"))
-      .groupBy(col("query_id"))
-      .agg(topk(col("id"), col("__negadc")).as("hits"))
-      .select(col("query_id"), posexplode(col("hits")).as(Seq("rank0", "hit")))
-      .select(col("query_id"), col("hit.id").as(idCol),
-        negate(col("hit.score")).as("adc"),
-        (col("rank0") + 1).cast("int").as("doc_rank"))
+      .filter(col("cell_id").isin(fanOut.keys.toSeq.sorted: _*))
+      .select(col(idCol).cast("long").as("id"), col("codes"),
+        explode(element_at(typedLit(fanOut), col("cell_id").cast("int"))).as("__probe"))
+      .select(col("__probe._1").as("query"), col("id"),
+        GraftFunctions.adcLutCells(col("codes"), col("__probe._2"), typedLit(luts))
+          .as("adc"))
   }
 
   /** FAISS `IndexIVF::search_and_reconstruct`: the probed ADC top-`k`
@@ -649,5 +682,47 @@ object PqIndex {
       .select(idCol).collect().map(_.getLong(0)).toSeq
     VectorSearch.knnScores(
       floats.filter(col(idCol).isin(candIds: _*)), queryVec, k, idCol = idCol)
+  }
+}
+
+/** One retained IVFADC hit. */
+private[operators] final case class AdcHit(adc: Double, id: Long)
+
+/** Per-query bounded top-`k` of [[AdcHit]]s: the partition accumulator of
+  * [[PqIndex.searchIvfAdcBatch]] and its driver-side merge. Each query
+  * keeps at most `k` hits in a heap whose head is the worst one retained,
+  * so one instance holds at most `nQueries · k` hits. Order:
+  * [[AdcTopK.Order]]; hits equal under it are all kept. */
+private[operators] final class AdcTopK(nQueries: Int, k: Int) extends Serializable {
+  import AdcTopK.Order
+  private val heaps = Array.fill(nQueries)(
+    scala.collection.mutable.PriorityQueue.empty[AdcHit](Order))
+
+  def add(query: Int, id: Long, adc: Double): AdcTopK = {
+    offer(heaps(query), AdcHit(adc, id)); this
+  }
+
+  def merge(other: AdcTopK): AdcTopK = {
+    other.heaps.indices.foreach(q => other.heaps(q).foreach(offer(heaps(q), _)))
+    this
+  }
+
+  /** Query `q`'s hits, best first. */
+  def best(query: Int): Seq[AdcHit] = heaps(query).toSeq.sorted(Order)
+
+  private def offer(heap: scala.collection.mutable.PriorityQueue[AdcHit],
+                    hit: AdcHit): Unit =
+    if (heap.size < k) heap.enqueue(hit)
+    else if (Order.lt(hit, heap.head)) { heap.dequeue(); heap.enqueue(hit) }
+}
+
+private[operators] object AdcTopK {
+  /** `adc` ascending, then id ascending — the order [[TopKByScore]] gives
+    * its (id, −adc) inputs, `java.lang.Double.compare` included. */
+  val Order: Ordering[AdcHit] = new Ordering[AdcHit] {
+    def compare(a: AdcHit, b: AdcHit): Int = {
+      val c = java.lang.Double.compare(a.adc, b.adc)
+      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+    }
   }
 }

@@ -63,21 +63,33 @@ object IndexIngest {
       // Health record: occupancy imbalance + the batch's mean residual
       // distance to its assigned centroids (the q137 drift metric, per
       // micro-batch — residuals growing across batches = the quantizer
-      // drifting away from the incoming data; decimal idiom so the
-      // number is partitioning-independent, ANSI-guarded for an empty
-      // batch).
-      val resid = withRes
-        .select(graft.functions.GraftFunctions.normF32(col("__res")).as("__d"))
-        .agg(count(lit(1)).as("__n"),
-          sum(round(col("__d"), 6).cast("decimal(22,6)")).as("__sd"))
-        .select(round(when(col("__n") > 0,
-          col("__sd").cast("double") / col("__n").cast("double")), 4)
-          .as("mean_resid"))
-      IvfIndex.cellStats(withCells, ivf)
-        .agg(sum("n_vectors").as("n_vectors"),
-          first("imbalance_factor").as("imbalance_factor"))
-        .crossJoin(resid)
-        .withColumn("batch_id", lit(batchId))
+      // drifting away from the incoming data). One aggregate per cell
+      // (at most the trained cells plus a null-cell row for null
+      // embeddings); the decimal idiom keeps the residual sum exact and
+      // partitioning-independent, so the driver-side totals below are
+      // the corpus-wide sums. `n_vectors` and the imbalance count only
+      // assigned rows; the residual mean divides by every row.
+      val perCell = withRes.groupBy(col("cell_id"))
+        .agg(count(lit(1)),
+          sum(round(graft.functions.GraftFunctions.normF32(col("__res")), 6)
+            .cast("decimal(22,6)")))
+        .collect()
+      val assigned = perCell.filterNot(_.isNullAt(0)).map(_.getLong(1))
+      val residSum = perCell.flatMap(r => Option(r.getDecimal(2))).reduceOption(_ add _)
+      val ncells = ivf.centroids.map(_.length).getOrElse(1)
+      import batch.sparkSession.implicits._
+      Seq((assigned.sum, assigned.map(n => n * n).sum, perCell.map(_.getLong(1)).sum))
+        .toDF("n_vectors", "__ss", "__rows")
+        .select(col("n_vectors"),
+          // ANSI-guarded: an empty batch has no rows
+          round(when(col("n_vectors") > 0,
+            lit(ncells.toDouble) * col("__ss").cast("double") /
+              (col("n_vectors").cast("double") * col("n_vectors").cast("double"))), 4)
+            .as("imbalance_factor"),
+          round(when(col("__rows") > 0,
+            lit(residSum.orNull).cast("double") / col("__rows").cast("double")), 4)
+            .as("mean_resid"),
+          lit(batchId).as("batch_id"))
         .write.mode("overwrite").parquet(s"$statsPath/batch=$batchId")
     } finally withCells.unpersist()
   }

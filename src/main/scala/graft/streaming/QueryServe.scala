@@ -9,16 +9,17 @@ import org.apache.spark.sql.functions._
   * one at a time against the in-RAM index) re-expressed engine-side:
   * a STREAM of query vectors is answered in micro-batches against the
   * PERSISTED cell-partitioned IVFADC index, each batch through
-  * [[PqIndex.searchIvfAdcBatch]] — one union-of-probed-cells scan per
+  * [[PqIndex.searchIvfAdcBatch]] — one union-of-probed-cells scan job per
   * micro-batch regardless of how many requests it carries, which is
   * exactly the batching a serving tier buys by queueing requests.
   *
-  * The micro-batch's query vectors round-trip through the driver
+  * A served micro-batch is three Spark jobs: collect the requests, scan,
+  * write the results. The query vectors round-trip through the driver
   * deliberately (requests are the tiny side — the same driver-known-key
   * posture as every single-query fetch); the corpus is never collected
-  * and never shuffled: probed partitions are scanned, the broadcast
-  * (query, cell, slot) join fans rows out to their queries, and the
-  * bounded aggregator ships only partial top-k lists.
+  * and never shuffled: probed partitions are scanned, a literal
+  * cell → (query, slot) map fans rows out to their queries, and each
+  * task returns at most `k` hits per query to the driver.
   *
   * Results land at `resultsPath/batch=<id>`, a [[BatchStore]] (its
   * scaladoc has the retry and compaction contract); a results consumer
@@ -62,6 +63,7 @@ object QueryServe {
     if (qs.isEmpty) return
     PqIndex.searchIvfAdcBatch(BatchStore.relist(encoded), ivf, pq, qs, k, nprobe)
       .withColumn("batch_id", lit(batchId))
+      .coalesce(1) // driver-local hits (≤ n_q·k rows): one file per batch
       .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
   }
 

@@ -1,7 +1,9 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.operators.{IvfIndex, PqIndex}
 import graft.streaming.IndexIngest
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -91,6 +93,50 @@ class IndexIngestSpec extends AnyFunSuite {
     assert(stats.forall(_._3 >= 1.0))
     // the drift metric rides every batch record: a real residual norm
     assert(stats.forall(_._4 > 0.0), s"mean_resid missing/zero: ${stats.toSeq}")
+  }
+
+  /** An in-test copy of the health-record plan `ingestBatch` ran before
+    * its single per-cell aggregate: [[IvfIndex.cellStats]] summed, crossed
+    * with a residual aggregate over every row. */
+  private def cellStatsRecord(batch: DataFrame, ivf: IvfIndex.Ivf, batchId: Long): DataFrame = {
+    val withCells = IvfIndex.assign(batch, ivf)
+    val resid = withCells
+      .select(GraftFunctions.normF32(
+        PqIndex.residualColumn(ivf, col("embedding"), col("cell_id"))).as("__d"))
+      .agg(count(lit(1)).as("__n"),
+        sum(round(col("__d"), 6).cast("decimal(22,6)")).as("__sd"))
+      .select(round(when(col("__n") > 0,
+        col("__sd").cast("double") / col("__n").cast("double")), 4).as("mean_resid"))
+    IvfIndex.cellStats(withCells, ivf)
+      .agg(sum("n_vectors").as("n_vectors"),
+        first("imbalance_factor").as("imbalance_factor"))
+      .crossJoin(resid)
+      .select(lit(batchId).as("batch_id"), col("n_vectors"), col("imbalance_factor"),
+        col("mean_resid"))
+  }
+
+  test("the health record equals the cellStats plan: normal, one-cell, empty, null embedding") {
+    val train = clustered(0 until 300, 6).toDF("doc_id", "embedding")
+    val ivf = IvfIndex.train(train, nlist = 6)
+    val (_, pq) = PqIndex.buildIvfAdc(IvfIndex.assign(train, ivf), ivf, m = 4, ksub = 8)
+    val dir = java.nio.file.Files.createTempDirectory("ingest-health").toString
+    val oneCell = clustered(600 until 660, 6).filter(_._1 % 6 == 0)
+    val withNull = clustered(700 until 730, 6) :+ (730L -> (null: Array[Float]))
+    val batches = Seq(clustered(500 until 547, 6), oneCell,
+      Seq.empty[(Long, Array[Float])], withNull).map(_.toDF("doc_id", "embedding"))
+    assert(IvfIndex.assign(batches(1), ivf).select("cell_id").distinct().count() == 1)
+    batches.zipWithIndex.foreach { case (b, id) =>
+      IndexIngest.ingestBatch(b, id.toLong, ivf, pq, s"$dir/corpus", s"$dir/stats",
+        "doc_id", "embedding")
+      val got = IndexIngest.loadStats(spark, s"$dir/stats")
+        .filter(col("batch_id") === id.toLong).collect().toSeq
+      assert(got == cellStatsRecord(b, ivf, id.toLong).collect().toSeq, s"batch $id")
+    }
+    val stats = IndexIngest.loadStats(spark, s"$dir/stats")
+      .as[(Long, Long, Option[Double], Option[Double])].collect().sortBy(_._1).toSeq
+    assert(stats.map(_._2) == Seq(47L, 10L, 0L, 30L))
+    assert(stats(2)._3.isEmpty && stats(2)._4.isEmpty, "an empty batch has null ratios")
+    assert(stats(1)._3.contains(6.0), "one cell of six holds every vector")
   }
 
   test("compaction folds batch dirs; search ≡ pre-compaction, pruning intact") {

@@ -296,6 +296,142 @@ class PqIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** An in-test copy of the broadcast-join + [[graft.operators.TopKByScore]]
+    * plan `searchIvfAdcBatch` ran before it became one scan job: the
+    * reference its rows, order and column types are held to. */
+  private def broadcastJoinBatch(encoded: DataFrame, ivf: graft.operators.IvfIndex.Ivf,
+                                 pq: PqIndex.Pq, queries: Seq[(Long, Array[Float])],
+                                 k: Int, nprobe: Int): DataFrame = {
+    import graft.functions.GraftFunctions
+    val cents = ivf.centroids.get
+    val entries = queries.flatMap { case (qid, qv) => probed(cents, qv, nprobe).map(qid -> _) }
+    val byId = queries.toMap
+    val luts = entries.map { case (qid, cell) =>
+      val qv = byId(qid)
+      val c = cents(cell)
+      PqIndex.adcLut(pq, Array.tabulate(qv.length)(j => (qv(j).toDouble - c(j)).toFloat))
+        .map(_.toSeq).toSeq
+    }
+    val probeDf = entries.zipWithIndex
+      .map { case ((qid, cell), slot) => (qid, cell, slot) }
+      .toDF("query_id", "cell_id", "__slot")
+    val topk = udaf(new graft.operators.TopKByScore(k))
+    encoded
+      .filter(col("cell_id").isin(entries.map(_._2).distinct: _*))
+      .join(broadcast(probeDf), "cell_id")
+      .withColumn("adc",
+        GraftFunctions.adcLutCells(col("codes"), col("__slot"), typedLit(luts)))
+      .select(col("query_id"), col("doc_id").cast("long").as("id"),
+        negate(col("adc")).as("__negadc"))
+      .groupBy(col("query_id"))
+      .agg(topk(col("id"), col("__negadc")).as("hits"))
+      .select(col("query_id"), posexplode(col("hits")).as(Seq("rank0", "hit")))
+      .select(col("query_id"), col("hit.id").as("doc_id"),
+        negate(col("hit.score")).as("adc"),
+        (col("rank0") + 1).cast("int").as("doc_rank"))
+  }
+
+  /** The IVFADC probe rule: the `nprobe` nearest centroids by sequential
+    * squared L2, cell id breaking ties. */
+  private def probed(cents: Array[Array[Double]], qv: Array[Float], nprobe: Int): Seq[Int] =
+    cents.indices.sortBy { i =>
+      (cents(i).indices.foldLeft(0.0) { (d2, j) =>
+        val d = qv(j).toDouble - cents(i)(j); d2 + d * d
+      }, i)
+    }.take(nprobe)
+
+  private def sameBatchAnswer(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(3)))
+    val (g, w) = (rows(got), rows(want))
+    assert(w.nonEmpty)
+    assert(g == w, s"\ngot  ${g.mkString(" ")}\nwant ${w.mkString(" ")}")
+  }
+
+  test("searchIvfAdcBatch ≡ the broadcast-join + TopKByScore plan: rows, order, types") {
+    import graft.operators.IvfIndex
+    val data = clustered(400, 8)
+    val (withCells, ivf) = IvfIndex.build(data.toDF("doc_id", "embedding"), nlist = 8)
+    val (enc, pq) = PqIndex.buildIvfAdc(withCells, ivf, m = 4, ksub = 8)
+    val rows = enc.select("doc_id", "cell_id", "codes").as[(Long, Int, Seq[Int])]
+      .collect().sortBy(_._1).toSeq
+    val cents = ivf.centroids.get
+    // query 3's probed cells are emptied: it must come back with no rows
+    val emptied = probed(cents, data(3)._2, 2).toSet
+    val kept = rows.filterNot(r => emptied(r._2))
+    // exact ties across partitions: copies of one row's (cell, codes)
+    // under ids below and above it, at the far end of the corpus; and
+    // one id present twice (as if in two batch dirs)
+    val (tieId, tieCell, tieCodes) = kept(7)
+    val twice = kept.find(r => r._2 == tieCell && r._1 != tieId).get
+    val planted = Seq(5L, 9_000L).map(id => (id, tieCell, tieCodes)) :+ twice
+    val corpus = spark.sparkContext.parallelize(kept ++ planted, 3)
+      .toDF("doc_id", "cell_id", "codes")
+    assert(corpus.rdd.getNumPartitions == 3)
+    val queries = Seq(3L, 12L, 20L, tieId).distinct.map(id => id -> data(id.toInt)._2) :+
+      (77L -> data(tieId.toInt)._2.map(_ + 0.01f))
+    Seq(1, 5, 1000).foreach { k =>
+      val got = PqIndex.searchIvfAdcBatch(corpus, ivf, pq, queries, k, nprobe = 2)
+      sameBatchAnswer(got, broadcastJoinBatch(corpus, ivf, pq, queries, k, nprobe = 2))
+      assert(got.filter(col("query_id") === 3L).isEmpty)
+    }
+    val top = PqIndex.searchIvfAdcBatch(corpus, ivf, pq, queries, 1000, nprobe = 2)
+      .filter(col("query_id") === tieId).select("doc_id", "adc").as[(Long, Double)].collect()
+    val tied = top.filter(_._2 == top.find(_._1 == tieId).get._2).map(_._1).toSeq
+    assert(Seq(5L, tieId, 9_000L).forall(tied.contains), s"planted tie lost: $tied")
+    assert(tied == tied.sorted, s"tie not broken by id: $tied")
+    assert(top.count(_._1 == twice._1) == 2, "a repeated id must be kept twice")
+  }
+
+  test("searchIvfAdcBatch: one scan job, no exchange, no broadcast; cell filter on the scan") {
+    import graft.operators.IvfIndex
+    val data = clustered(400, 8)
+    val (withCells, ivf) = IvfIndex.build(data.toDF("doc_id", "embedding"), nlist = 8)
+    val (enc, pq) = PqIndex.buildIvfAdc(withCells, ivf, m = 4, ksub = 8)
+    val dir = java.nio.file.Files.createTempDirectory("pq-batch").toString
+    // two batch dirs sharing doc 0
+    Seq(0 -> (col("doc_id") < 200), 1 -> (col("doc_id") >= 200 || col("doc_id") === 0))
+      .foreach { case (b, keep) =>
+        enc.filter(keep).select("doc_id", "cell_id", "codes")
+          .write.partitionBy("cell_id").parquet(s"$dir/batch=$b")
+      }
+    val store = spark.read.parquet(dir)
+    val queries = Seq(0L, 7L, 250L).map(id => id -> data(id.toInt)._2)
+    // the plan string, not a node walk: AQE hides an exchange's nodes
+    // from `collect` until it has run
+    val scan = PqIndex.ivfAdcBatchScan(store, ivf, pq, queries, 2, "doc_id")
+      .queryExecution.executedPlan.toString
+    Seq("Exchange", "BroadcastHashJoin").foreach(n =>
+      assert(!scan.contains(n), s"$n in the batch scan:\n$scan"))
+    assert("PartitionFilters: \\[[^\\]]*cell_id".r.findFirstIn(scan).nonEmpty,
+      s"cell filter not on the scan:\n$scan")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sc = spark.sparkContext
+    val got = withJobStarts { e =>
+      if (e.properties.getProperty("spark.jobGroup.id") == "pq-batch-spec") jobs.incrementAndGet()
+    } {
+      sc.setJobGroup("pq-batch-spec", "searchIvfAdcBatch job count")
+      try PqIndex.searchIvfAdcBatch(store, ivf, pq, queries, 5, nprobe = 2).collect()
+      finally sc.clearJobGroup()
+    }
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs for one batch search")
+    assert(got.count(_.getLong(1) == 0L) == 2, "doc 0 from both batch dirs")
+    sameBatchAnswer(PqIndex.searchIvfAdcBatch(store, ivf, pq, queries, 5, nprobe = 2),
+      broadcastJoinBatch(store, ivf, pq, queries, 5, nprobe = 2))
+  }
+
+  test("searchIvfAdcBatch rejects a repeated query id, naming it") {
+    import graft.operators.IvfIndex
+    val data = clustered(400, 8)
+    val (withCells, ivf) = IvfIndex.build(data.toDF("doc_id", "embedding"), nlist = 8)
+    val (enc, pq) = PqIndex.buildIvfAdc(withCells, ivf, m = 4, ksub = 8)
+    val queries = Seq(4L, 9L, 4L, 9L).map(id => id -> data(id.toInt)._2)
+    val err = intercept[IllegalArgumentException] {
+      PqIndex.searchIvfAdcBatch(enc, ivf, pq, queries, 5, nprobe = 2)
+    }
+    assert(err.getMessage.contains("query id 4 "), err.getMessage)
+  }
+
   test("search_and_reconstruct: hits match searchIvfAdc; recon = centroid + decode") {
     import graft.operators.IvfIndex
     val data = clustered(400, 8)

@@ -76,6 +76,37 @@ class QueryServeSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/results/batch=99").exists())
   }
 
+  test("serveBatch over an existing store runs 3 jobs: requests, scan, results write") {
+    val corpus = clustered(0 until 300, 6)
+    val docs = corpus.toDF("doc_id", "embedding")
+    val ivf = IvfIndex.train(docs, nlist = 6)
+    val (enc, pq) = PqIndex.buildIvfAdc(IvfIndex.assign(docs, ivf), ivf, m = 4, ksub = 8)
+    val dir = java.nio.file.Files.createTempDirectory("serve-jobs").toString
+    enc.select("doc_id", "cell_id", "codes")
+      .write.partitionBy("cell_id").parquet(s"$dir/index")
+    val encoded = spark.read.parquet(s"$dir/index")
+    // requests read from files, as a stream's micro-batch is: collecting
+    // them is a job (a local frame would collect without one)
+    Seq(1L -> corpus(5)._2, 2L -> corpus(17)._2, 3L -> corpus(40)._2)
+      .toDF("query_id", "embedding").write.parquet(s"$dir/requests")
+    val reqs = spark.read.parquet(s"$dir/requests")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    SparkTestBase.withJobStarts { e =>
+      if (e.properties.getProperty("spark.jobGroup.id") == "serve-spec") jobs.incrementAndGet()
+    } {
+      sc.setJobGroup("serve-spec", "serveBatch job count")
+      try QueryServe.serveBatch(reqs, 0L, ivf, pq, encoded, s"$dir/results",
+        5, 2, "query_id", "embedding")
+      finally sc.clearJobGroup()
+    }
+    assert(jobs.get == 3, s"${jobs.get} Spark jobs for one served micro-batch")
+    val files = new java.io.File(s"$dir/results/batch=0").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"${files.length} result files for one batch")
+    assert(QueryServe.loadResults(spark, s"$dir/results").count() == 15L)
+  }
+
   test("graph-tier serving == direct batched walk; retry idempotent") {
     import graft.operators.KnnGraph
     val corpus = clustered(0 until 300, 6)
