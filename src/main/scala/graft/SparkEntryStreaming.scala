@@ -877,8 +877,8 @@ private[graft] trait SparkEntryStreaming { this: SparkEntry.type =>
       |ORDER BY g.asset_id""".stripMargin
 
   /** STREAMING WIDE-hash asset screen — q268's contract at 256-bit
-    * codes ([[graft.operators.Dedup.hammingScreenedIngestWide]], the
-    * r15 judge's pHash-width ask carried to the streaming store):
+    * codes ([[graft.operators.Dedup.hammingScreenedIngest]] over an
+    * `array<bigint>` column, the pHash width carried to the store):
     * micro-batches of (asset_id, 4-word code) are screened against
     * every prior batch via the banded array-payload store (8 × 32-bit
     * bands, popcount-over-words verify at radius 6 — lossless, ≤
@@ -904,9 +904,9 @@ private[graft] trait SparkEntryStreaming { this: SparkEntry.type =>
             .option("maxFilesPerTrigger", "1").parquet(inDir)
             .repartition(8))
           .withColumnRenamed("doc_id", "asset_id")
-        Dedup.hammingScreenedIngestWide(stream, store, flagged,
-          s"$stage/ckpt", codeCol = "code", idCol = "asset_id",
-          bands = 8, bandBits = 32, words = 4, maxHamming = 6)
+        Dedup.hammingScreenedIngest(stream, store, flagged,
+          s"$stage/ckpt", hashCol = "code", idCol = "asset_id",
+          bands = 8, bandBits = 32, maxHamming = 6)
       }
       try q.processAllAvailable() finally q.stop()
       s.read.parquet(flagged)

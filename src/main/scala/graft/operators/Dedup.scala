@@ -3,7 +3,7 @@ package graft.operators
 import graft.GraftConfig
 import graft.functions.GraftFunctions
 import graft.streaming.BatchStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -437,15 +437,7 @@ object Dedup {
   private[graft] def verifyPairsByArray(docs: DataFrame, cands: DataFrame,
                                         textCol: String, idCol: String,
                                         n: Int): DataFrame = {
-    val baseArr = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
-      .withColumn("sz", size(col("shs")))
-      .filter(col("sz") > 0)
-    val arrBytes = baseArr.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcastOk = arrBytes <= BigInt(
-      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
-    def maybeBcast(d: DataFrame): DataFrame = if (bcastOk) broadcast(d) else d
-    val arr = baseArr.select(col("id"), col("shs"), col("sz"))
+    val (arr, maybeBcast) = shingleArrays(docs, textCol, idCol, n)
     cands.repartition(cands.sparkSession.sessionState.conf.numShufflePartitions,
         col("id_a"))
       .join(maybeBcast(arr), col("id_a") === col("id"))
@@ -456,6 +448,24 @@ object Dedup {
       .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
       .select("id_a", "id_b", "n_a", "n_b", "n_inter", "n_union")
+  }
+
+  /** The (id, shs, sz) shingle-array frame the array-form verifies
+    * ([[verifyPairsByArray]], [[containmentVerify]]) join to their
+    * pairs, docs without shingles dropped, and the broadcast gate for
+    * it: `broadcast` only when the optimizer's size estimate of the
+    * frame fits the session's autoBroadcastJoinThreshold, else the
+    * frame unchanged (shuffle join). See [[verifyPairsByArray]] for
+    * why the hint is gated and how the estimate errs. */
+  private def shingleArrays(docs: DataFrame, textCol: String, idCol: String,
+                            n: Int): (DataFrame, DataFrame => DataFrame) = {
+    val arr = docs
+      .select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
+      .withColumn("sz", size(col("shs")))
+      .filter(col("sz") > 0)
+    val bcastOk = arr.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(
+      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    (arr, d => if (bcastOk) broadcast(d) else d)
   }
 
   /** Winnowing fingerprints (the MOSS document-fingerprint scheme):
@@ -622,10 +632,7 @@ object Dedup {
                                        textCol: String, idCol: String,
                                        n: Int, invTheta: Int): DataFrame = {
     GraftFunctions.register(docs.sparkSession)
-    val baseArr = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
-      .withColumn("sz", size(col("shs")))
-      .filter(col("sz") > 0)
+    val (baseArr, maybeBcast) = shingleArrays(docs, textCol, idCol, n)
     // the q228 fan-out stance: key the repartition on id_a ALONE (an
     // (id_a, id_b) key collapses into the distinct's exchange and
     // AQE-coalesces the CPU-bound verify to 2 tasks)
@@ -636,10 +643,6 @@ object Dedup {
     // ±30% run-to-run variance) — the containment compositions are
     // candidate-generation-bound, not broadcast-build-bound, so the
     // per-side form stays.)
-    val arrBytes = baseArr.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcastOk = arrBytes <= BigInt(
-      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
-    def maybeBcast(d: DataFrame): DataFrame = if (bcastOk) broadcast(d) else d
     cands.repartition(cands.sparkSession.sessionState.conf.numShufflePartitions,
         col("id_a"))
       .join(maybeBcast(baseArr.select(col("id").as("id_a"), col("shs").as("sh_a"),
@@ -1783,47 +1786,55 @@ object Dedup {
   }
 
   // -------------------------------------------------------------------
-  // Banded-Hamming near-dup engine — ONE operator under the simhash
-  // text tier (q42), the image aHash tier (q258/q264), and the audio
-  // energy-hash tier (q263); the r14 judge finding: the same
-  // band-explode + equality self-join + popcount-verify idiom was
-  // written inline three times, and the inline copies lacked the
-  // hot-bucket cap. Works over any precomputed hash of ≤ 64 bits.
+  // Banded-Hamming near-dup engine — ONE operator family under the
+  // simhash text tier (q42), the image aHash tier (q258/q264), the
+  // audio energy-hash tier (q263) and the 256-bit code tier
+  // (q271/q272). The same band-explode + equality self-join +
+  // popcount-verify idiom was once written inline three times, and the
+  // inline copies lacked the hot-bucket cap. Every operator takes a
+  // hash column of either type, an integral hash of ≤ 64 bits or an
+  // `array<bigint>` word array; [[HammingForm]] makes that one choice.
   // -------------------------------------------------------------------
 
-  /** Per-row band rows (id, h, band, key) over a precomputed hash
-    * column: key b = bits [b·bandBits, (b+1)·bandBits) extracted with
-    * an arithmetic shift + mask (the mask kills sign-extension, so a
-    * negative 64-bit hash bands correctly; a SQL oracle replays the
-    * identical `(h >> (bandBits·b)) & mask` arithmetic). */
-  def hammingBands(hashed: DataFrame, hashCol: String, idCol: String,
-                   bands: Int, bandBits: Int): DataFrame = {
-    require(bands >= 1 && bandBits >= 1 && bands * bandBits <= 64,
-      s"need 1 <= bands*bandBits <= 64: bands=$bands bandBits=$bandBits")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1L
-    hashed.select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
-      .select(col("id"), col("h"),
-        posexplode(array((0 until bands).map(b =>
-          shiftright(col("h"), bandBits * b).bitwiseAND(lit(mask))): _*))
-          .as(Seq("band", "key")))
+  /** The banded-Hamming family's one type decision, read off the hash
+    * column's data type by [[hammingForm]]. Band b is bits
+    * [b·bandBits, (b+1)·bandBits) of the hash in both forms.
+    *  - [[Hash64]] (any integral column): payload `h`, the hash cast to
+    *    long; the key is an arithmetic shift + mask (the mask kills
+    *    sign-extension, so a negative 64-bit hash bands correctly; a SQL
+    *    oracle replays the identical `(h >> (bandBits·b)) & mask`
+    *    arithmetic); verify `bit_count(xor)`.
+    *  - [[HashWords]] (`array<bigint>`: 256-bit pHash, multi-word
+    *    simhash, the q135 binary-code family): payload `code`, the
+    *    little-endian word array, which needs ⌈bands·bandBits/64⌉ words;
+    *    a key straddles word boundaries where it must (lo = word[w] >>>
+    *    off, hi = word[w+1] << (64−off); the hi leg is guarded: a Java
+    *    shift by 64 is a no-op, not zero); verify
+    *    [[graft.functions.GraftFunctions.hammingWords]].
+    * Band rows, store rows and store dirs carry the payload under its
+    * column name, so a store keeps the form it was written in. */
+  private sealed abstract class HammingForm(val payload: String) {
+    /** The hash column as the payload column named [[payload]]. */
+    def payloadOf(hashCol: String): Column
+    /** Band b's key, read from the [[payload]] column. */
+    def bandKey(b: Int, bandBits: Int): Column
+    /** Exact Hamming distance between two payload columns. */
+    def verify(a: Column, b: Column): Column
   }
 
-  /** [[hammingBands]] for WIDE codes (`array<bigint>` — 256-bit pHash,
-    * multi-word simhash, the q135 binary-code family): band b is bits
-    * [b·bandBits, (b+1)·bandBits) of the little-endian word array,
-    * straddling word boundaries where it must (lo = word[w] >>> off,
-    * hi = word[w+1] << (64−off) — the hi leg is guarded: a Java shift
-    * by 64 is a no-op, not zero). Output (id, code, band, key); the
-    * same (band, key)-equality machinery as the 64-bit tier runs on
-    * top, with [[graft.functions.GraftFunctions.hammingWords]] as the
-    * verify. `words` states the code width (bands·bandBits ≤ 64·words). */
-  def hammingBandsWide(hashed: DataFrame, codeCol: String, idCol: String,
-                       bands: Int, bandBits: Int, words: Int): DataFrame = {
-    require(bands >= 1 && bandBits >= 1 && bandBits <= 64 && words >= 1 &&
-      bands.toLong * bandBits <= 64L * words,
-      s"need 1 <= bands*bandBits <= 64*words: bands=$bands bandBits=$bandBits words=$words")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1L
-    def bandKey(b: Int): org.apache.spark.sql.Column = {
+  private def bandMask(bandBits: Int): Long =
+    if (bandBits == 64) -1L else (1L << bandBits) - 1L
+
+  private case object Hash64 extends HammingForm("h") {
+    def payloadOf(hashCol: String): Column = col(hashCol).cast("long").as("h")
+    def bandKey(b: Int, bandBits: Int): Column =
+      shiftright(col("h"), bandBits * b).bitwiseAND(lit(bandMask(bandBits)))
+    def verify(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  }
+
+  private case object HashWords extends HammingForm("code") {
+    def payloadOf(hashCol: String): Column = col(hashCol).as("code")
+    def bandKey(b: Int, bandBits: Int): Column = {
       val bitOff = b.toLong * bandBits
       val w = (bitOff / 64).toInt
       val off = (bitOff % 64).toInt
@@ -1833,97 +1844,69 @@ object Dedup {
         if (off > 0 && off + bandBits > 64)
           lo.bitwiseOR(shiftleft(element_at(col("code"), w + 2), 64 - off))
         else lo
-      key.bitwiseAND(lit(mask))
+      key.bitwiseAND(lit(bandMask(bandBits)))
     }
-    hashed.select(col(idCol).as("id"), col(codeCol).as("code"))
-      .select(col("id"), col("code"),
-        posexplode(array((0 until bands).map(bandKey): _*))
+    def verify(a: Column, b: Column): Column = GraftFunctions.hammingWords(a, b)
+  }
+
+  /** The [[HammingForm]] of `df`'s hash column: [[HashWords]] for
+    * `array<bigint>` (registering `hamming_words` on the session),
+    * [[Hash64]] for any integral type; any other type is rejected with
+    * the column named. */
+  private def hammingForm(df: DataFrame, hashCol: String): HammingForm = {
+    import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType}
+    df.select(col(hashCol)).schema.head.dataType match {
+      case ArrayType(LongType, _) =>
+        GraftFunctions.register(df.sparkSession)
+        HashWords
+      case ByteType | ShortType | IntegerType | LongType => Hash64
+      case t => throw new IllegalArgumentException(
+        s"hash column '$hashCol' must be an integral type or array<bigint>, " +
+          s"not ${t.simpleString}")
+    }
+  }
+
+  /** Band rows (id, <payload>, band, key) of `form` over the hash column. */
+  private def bandRows(form: HammingForm, hashed: DataFrame, hashCol: String,
+                       idCol: String, bands: Int, bandBits: Int): DataFrame = {
+    require(bands >= 1 && bandBits >= 1 && bandBits <= 64,
+      s"need bands >= 1 and 1 <= bandBits <= 64: bands=$bands bandBits=$bandBits")
+    require(form == HashWords || bands.toLong * bandBits <= 64,
+      s"need 1 <= bands*bandBits <= 64: bands=$bands bandBits=$bandBits")
+    hashed.select(col(idCol).as("id"), form.payloadOf(hashCol))
+      .select(col("id"), col(form.payload),
+        posexplode(array((0 until bands).map(form.bandKey(_, bandBits)): _*))
           .as(Seq("band", "key")))
   }
 
-  /** [[hammingNearDups]] over wide codes: banded candidates (capped,
-    * accounted via [[hammingDroppedBucketsWide]]), one
-    * popcount-over-words verify per candidate, lossless at radius ≤
-    * bands − 1 by the same pigeonhole. Output (id_a, id_b, hamming). */
-  def hammingNearDupsWide(hashed: DataFrame, codeCol: String,
-                          idCol: String = "doc_id", bands: Int = 8,
-                          bandBits: Int = 32, words: Int = 4,
-                          maxHamming: Int = 6,
-                          maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    GraftFunctions.register(hashed.sparkSession)
-    val banded = dropOverflow(
-      hammingBandsWide(hashed, codeCol, idCol, bands, bandBits, words),
-      Seq("band", "key"), maxBucketSize)
-    val a = banded.select(col("band"), col("key"), col("id").as("id_a"),
-      col("code").as("c_a"))
-    val b = banded.select(col("band"), col("key"), col("id").as("id_b"),
-      col("code").as("c_b"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        GraftFunctions.hammingWords(col("c_a"), col("c_b")).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Cap accounting for the wide tier ([[lshDroppedBuckets]] contract). */
-  def hammingDroppedBucketsWide(hashed: DataFrame, codeCol: String,
-                                idCol: String, bands: Int, bandBits: Int,
-                                words: Int,
-                                maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    overflowBuckets(
-      hammingBandsWide(hashed, codeCol, idCol, bands, bandBits, words),
-      Seq("band", "key"), maxBucketSize)
-
-  /** [[hammingScreenAgainst]] over wide codes — batch vs stored frame,
-    * same argmin report. */
-  def hammingScreenAgainstWide(batch: DataFrame, stored: DataFrame,
-                               codeCol: String = "code",
-                               idCol: String = "asset_id",
-                               bands: Int = 8, bandBits: Int = 32,
-                               words: Int = 4, maxHamming: Int = 6,
-                               maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    GraftFunctions.register(batch.sparkSession)
-    val bBands = hammingBandsWide(batch, codeCol, idCol, bands, bandBits, words)
-    val sBands = dropOverflow(
-      hammingBandsWide(stored, codeCol, idCol, bands, bandBits, words),
-      Seq("band", "key"), maxBucketSize)
-    bBands
-      .join(sBands.select(col("band"), col("key"),
-        col("id").as("stored_id"), col("code").as("stored_c")), Seq("band", "key"))
-      .select(col("id"), col("stored_id"),
-        GraftFunctions.hammingWords(col("code"), col("stored_c")).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .groupBy(col("id").as(idCol))
-      .agg(count(lit(1)).cast("long").as("n_matches"),
-        min(struct(col("hamming"), col("stored_id"))).as("__m"))
-      .select(col(idCol), col("n_matches"),
-        col("__m").getField("stored_id").as("top_match_id"),
-        col("__m").getField("hamming").as("hamming"))
-  }
+  /** Per-row band rows over a precomputed hash column: (id, h, band, key)
+    * for an integral column (bands·bandBits ≤ 64), (id, code, band, key)
+    * for an `array<bigint>` one. [[HammingForm]] has the band arithmetic
+    * of each. */
+  def hammingBands(hashed: DataFrame, hashCol: String, idCol: String,
+                   bands: Int, bandBits: Int): DataFrame =
+    bandRows(hammingForm(hashed, hashCol), hashed, hashCol, idCol, bands, bandBits)
 
   /** Accounting for [[hammingNearDups]]' bucket cap: skipped
     * (band, key) buckets with member counts (the [[lshDroppedBuckets]]
-    * contract). */
+    * contract). The hash column is integral or `array<bigint>`. */
   def hammingDroppedBuckets(hashed: DataFrame, hashCol: String, idCol: String,
                             bands: Int, bandBits: Int,
                             maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
     overflowBuckets(hammingBands(hashed, hashCol, idCol, bands, bandBits),
       Seq("band", "key"), maxBucketSize)
 
-  /** Banded-Hamming near-dup pairs over a precomputed ≤ 64-bit hash
-    * column — the generic LSH-for-Hamming-space join (Gionis/Indyk/
-    * Motwani bit-sampling specialized to contiguous bands): candidates
-    * come from equality self-joins on (band, key) — never all-pairs —
-    * and verify is one exact popcount per candidate. Pigeonhole: a
-    * pair at Hamming distance d flips at most d bands, so banding is
-    * LOSSLESS at radius ≤ bands − 1 and best-effort beyond (the
-    * standard trade; q258's flip construction pins the lossless case).
-    * Buckets above `maxBucketSize` — identical boilerplate assets, the
-    * all-dark image, digital silence — drop with accounting via
+  /** Banded-Hamming near-dup pairs over a precomputed hash column, of
+    * an integral type (≤ 64 bits) or `array<bigint>` (wide codes) — the
+    * generic LSH-for-Hamming-space join (Gionis/Indyk/Motwani
+    * bit-sampling specialized to contiguous bands): candidates come from
+    * equality self-joins on (band, key) — never all-pairs — and verify
+    * is one exact popcount per candidate. Pigeonhole: a pair at Hamming
+    * distance d flips at most d bands, so banding is LOSSLESS at radius
+    * ≤ bands − 1 and best-effort beyond (the standard trade; q258's flip
+    * construction pins the lossless case). Buckets above
+    * `maxBucketSize` — identical boilerplate assets, the all-dark image,
+    * digital silence — drop with accounting via
     * [[hammingDroppedBuckets]], bounding the join quadratically-safe
     * at 100 TB exactly like the MinHash tier's cap. Output:
     * (id_a, id_b, hamming). */
@@ -1931,14 +1914,17 @@ object Dedup {
                       idCol: String = "doc_id", bands: Int = 4,
                       bandBits: Int = 16, maxHamming: Int = 2,
                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val banded = dropOverflow(hammingBands(hashed, hashCol, idCol, bands, bandBits),
+    val form = hammingForm(hashed, hashCol)
+    val banded = dropOverflow(bandRows(form, hashed, hashCol, idCol, bands, bandBits),
       Seq("band", "key"), maxBucketSize)
-    val a = banded.select(col("band"), col("key"), col("id").as("id_a"), col("h").as("h_a"))
-    val b = banded.select(col("band"), col("key"), col("id").as("id_b"), col("h").as("h_b"))
+    val a = banded.select(col("band"), col("key"), col("id").as("id_a"),
+      col(form.payload).as("p_a"))
+    val b = banded.select(col("band"), col("key"), col("id").as("id_b"),
+      col(form.payload).as("p_b"))
     a.join(b, Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
+        form.verify(col("p_a"), col("p_b")).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -1946,8 +1932,9 @@ object Dedup {
   /** Screen a BATCH of hashed assets against a STORED hash table —
     * [[screenAgainst]]'s contract carried to Hamming space (the
     * multimodal face of the screened-ingest tier: "has an asset within
-    * radius r of this one been ingested before?"). Banded candidates
-    * (batch side × capped store side on (band, key) — never
+    * radius r of this one been ingested before?"). Both frames carry
+    * `hashCol` of one type: integral or `array<bigint>`. Banded
+    * candidates (batch side × capped store side on (band, key) — never
     * all-pairs), one popcount verify per candidate, lossless at
     * radius ≤ bands − 1. Per flagged asset one row:
     * (idCol, n_matches, top_match_id, hamming) — argmin by
@@ -1957,26 +1944,29 @@ object Dedup {
                            bands: Int = 4, bandBits: Int = 16,
                            maxHamming: Int = 2,
                            maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val bBands = hammingBands(batch, hashCol, idCol, bands, bandBits)
+    val form = hammingForm(batch, hashCol)
     val sBands = dropOverflow(
-      hammingBands(stored, hashCol, idCol, bands, bandBits),
+      bandRows(form, stored, hashCol, idCol, bands, bandBits),
       Seq("band", "key"), maxBucketSize)
-    hammingScreenJoin(bBands, sBands, idCol, maxHamming)
+    screenReport(form, bandRows(form, batch, hashCol, idCol, bands, bandBits),
+      sBands, idCol, maxHamming)
   }
 
   /** The banded screen join + argmin report shared by
     * [[hammingScreenAgainst]] (frame vs frame) and
-    * [[hammingScreenStoreBatch]] (frame vs banded store): candidates
-    * from (band, key) equality, one popcount verify per candidate,
-    * per flagged id one (n_matches, argmin-(hamming, stored id)) row.
-    * Both inputs are band rows carrying (id, h, band, key). */
-  private def hammingScreenJoin(bBands: DataFrame, sBands: DataFrame,
-                                idCol: String, maxHamming: Int): DataFrame =
+    * [[hammingScreenAgainstStore]] (frame vs banded store): candidates
+    * from (band, key) equality, one `form` verify per candidate, per
+    * flagged id one (n_matches, argmin-(hamming, stored id)) row.
+    * Both inputs are band rows carrying (id, <payload>, band, key). */
+  private def screenReport(form: HammingForm, bBands: DataFrame,
+                           sBands: DataFrame, idCol: String,
+                           maxHamming: Int): DataFrame =
     bBands
       .join(sBands.select(col("band"), col("key"),
-        col("id").as("stored_id"), col("h").as("stored_h")), Seq("band", "key"))
+        col("id").as("stored_id"), col(form.payload).as("stored_p")),
+        Seq("band", "key"))
       .select(col("id"), col("stored_id"),
-        bit_count(col("h").bitwiseXOR(col("stored_h"))).cast("long").as("hamming"))
+        form.verify(col(form.payload), col("stored_p")).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .groupBy(col("id").as(idCol))
@@ -2048,31 +2038,6 @@ object Dedup {
     * (the same "unbounded small dirs" budget). */
   val FreshBatchWarnThreshold = 64
 
-  /** One micro-batch of [[hammingScreenedIngest]] against the BANDED
-    * store layout (the r15 judge's streaming-screen scale finding: the
-    * flat per-batch layout re-read and re-banded the ENTIRE store
-    * every micro-batch — O(store) per batch, a year-old store of 10^10
-    * hashes would pay a full scan + 4× band-explode + shuffle per
-    * arriving batch). The store is written banded ONCE, at append:
-    *
-    *   `storePath/batch=<id>/band=<b>/kp=<p>/…`  rows (id, h, key)
-    *
-    * with kp = the band key's top [[HammingStorePrefixBits]] bits and
-    * files SORTED by key. A batch then probes only what it can hit —
-    * three nested prune layers, the IVF posture carried to Hamming
-    * space:
-    *  1. (band, kp) partition pruning from the batch's driver-known
-    *     prefix set (micro-batch-bounded, ≤ bands × 2^bits values);
-    *  2. key-set parquet pushdown (`key isin batchKeys` raised past
-    *     `inFilterThreshold`): sorted files make row-group min/max
-    *     stats key-narrow after [[compactHammingStore]], so the scan
-    *     reads O(batch × row-group) bytes FLAT in store size;
-    *  3. the (band, key) equality join itself (capped buckets).
-    * Retry discipline is the [[BatchStore]] one: screen against every
-    * prior batch dir (own dir excluded → replay never self-flags), then
-    * overwrite the own dir; a replay of an id a compaction absorbed is a
-    * NO-OP. Store rows are
-    * (id, h, key) per band — bands × 16 B per asset, never payloads. */
   /** Screen a batch against a BANDED hash store ([[hammingScreenBatch]]'s
     * layout) without ingesting it — the read-only probe face of the
     * family ("would any of these assets collide with the store?"):
@@ -2080,22 +2045,24 @@ object Dedup {
     * set, key-set parquet pushdown (session `inFilterThreshold` raised
     * for the scan's execution and restored — the result is
     * MATERIALIZED via localCheckpoint inside the call so the restore
-    * cannot race the scan), capped buckets, popcount verify. Report
-    * shape = [[hammingScreenAgainst]]. `excludeBatchId` drops one
-    * `batch=<id>` dir from the probe (the retry-discipline hook). */
-  /** The store-probe core shared by the 64-bit and wide faces:
-    * `bBands` carries (id, <payloadCol>, band, key, kp); `dist` builds
-    * the exact verify over (batch payload, stored payload). */
-  private def screenStoreCore(bBands0: DataFrame, payloadCol: String,
-                              dist: (org.apache.spark.sql.Column,
-                                     org.apache.spark.sql.Column)
-                                => org.apache.spark.sql.Column,
-                              storePath: String, excludeBatchId: Long,
-                              idCol: String, maxHamming: Int,
-                              maxBucketSize: Int,
-                              sink: Option[DataFrame => Unit] = None): DataFrame = {
-    val spark = bBands0.sparkSession
-    val bBands = bBands0
+    * cannot race the scan), capped buckets, popcount verify. The batch's
+    * `hashCol` is integral or `array<bigint>`, the type the store was
+    * written with. Report shape = [[hammingScreenAgainst]].
+    * `excludeBatchId` drops one `batch=<id>` dir from the probe (the
+    * retry-discipline hook); `sink` runs the caller's terminal action on
+    * the report inside the raised-threshold window instead. */
+  def hammingScreenAgainstStore(batch: DataFrame, storePath: String,
+                                hashCol: String = "h",
+                                idCol: String = "asset_id",
+                                bands: Int = 4, bandBits: Int = 16,
+                                maxHamming: Int = 2,
+                                maxBucketSize: Int = DefaultMaxBucketSize,
+                                excludeBatchId: Long = Long.MinValue,
+                                sink: Option[DataFrame => Unit] = None): DataFrame = {
+    val spark = batch.sparkSession
+    val form = hammingForm(batch, hashCol)
+    val bBands = bandRows(form, batch, hashCol, idCol, bands, bandBits)
+      .withColumn("kp", kpOf(bandBits))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // driver-known prune sets (bounded: micro-batch × bands) — ONE
@@ -2135,22 +2102,9 @@ object Dedup {
         val stored = if (keyPushdown)
           stored0.filter(col("key").isin(keys.toSeq: _*)) else stored0
         val sBands = dropOverflow(
-          stored.select(col("id"), col(payloadCol), col("band"), col("key")),
+          stored.select(col("id"), col(form.payload), col("band"), col("key")),
           Seq("band", "key"), maxBucketSize)
-        val report = bBands
-          .join(sBands.select(col("band"), col("key"),
-            col("id").as("stored_id"),
-            col(payloadCol).as("__sp")), Seq("band", "key"))
-          .select(col("id"), col("stored_id"),
-            dist(col(payloadCol), col("__sp")).cast("long").as("hamming"))
-          .distinct()
-          .filter(col("hamming") <= maxHamming)
-          .groupBy(col("id").as(idCol))
-          .agg(count(lit(1)).cast("long").as("n_matches"),
-            min(struct(col("hamming"), col("stored_id"))).as("__m"))
-          .select(col(idCol), col("n_matches"),
-            col("__m").getField("stored_id").as("top_match_id"),
-            col("__m").getField("hamming").as("hamming"))
+        val report = screenReport(form, bBands, sBands, idCol, maxHamming)
         // batch path: run the caller's terminal action INSIDE the
         // raised-threshold window (one job, no extra materialization);
         // standalone path: materialize before the conf restore so the
@@ -2163,49 +2117,42 @@ object Dedup {
     } finally bBands.unpersist()
   }
 
-  def hammingScreenAgainstStore(batch: DataFrame, storePath: String,
-                                hashCol: String = "h",
-                                idCol: String = "asset_id",
-                                bands: Int = 4, bandBits: Int = 16,
-                                maxHamming: Int = 2,
-                                maxBucketSize: Int = DefaultMaxBucketSize,
-                                excludeBatchId: Long = Long.MinValue,
-                                sink: Option[DataFrame => Unit] = None): DataFrame =
-    screenStoreCore(
-      hammingBands(batch, hashCol, idCol, bands, bandBits)
-        .withColumn("kp", kpOf(bandBits)),
-      "h", (a, b) => bit_count(a.bitwiseXOR(b)),
-      storePath, excludeBatchId, idCol, maxHamming, maxBucketSize, sink)
-
-  /** [[hammingScreenAgainstStore]] for WIDE codes (same banded store
-    * layout with an `array<bigint>` payload column). */
-  def hammingScreenAgainstStoreWide(batch: DataFrame, storePath: String,
-                                    codeCol: String = "code",
-                                    idCol: String = "asset_id",
-                                    bands: Int = 8, bandBits: Int = 32,
-                                    words: Int = 4, maxHamming: Int = 6,
-                                    maxBucketSize: Int = DefaultMaxBucketSize,
-                                    excludeBatchId: Long = Long.MinValue,
-                                    sink: Option[DataFrame => Unit] = None): DataFrame = {
-    GraftFunctions.register(batch.sparkSession)
-    screenStoreCore(
-      hammingBandsWide(batch, codeCol, idCol, bands, bandBits, words)
-        .withColumn("kp", kpOf(bandBits)),
-      "code", (a, b) => GraftFunctions.hammingWords(a, b),
-      storePath, excludeBatchId, idCol, maxHamming, maxBucketSize, sink)
-  }
-
-  /** The per-batch screen + banded-append core ([[hammingScreenBatch]]'s
-    * scaladoc has the layout contract); `mkBands` builds the band rows
-    * from the batch, `probe` runs the store screen. */
-  private def screenBatchCore(batch: DataFrame, batchId: Long,
-                              storePath: String, flaggedPath: String,
-                              payloadCol: String, bands: Int, bandBits: Int,
-                              mkBands: DataFrame => DataFrame,
-                              probeWrite: (DataFrame, String) => Unit): Unit = {
+  /** One micro-batch of [[hammingScreenedIngest]] against the BANDED
+    * store layout. A flat per-batch layout would re-read and re-band
+    * the ENTIRE store every micro-batch — O(store) per batch: a
+    * year-old store of 10^10 hashes would pay a full scan + 4×
+    * band-explode + shuffle per arriving batch. The store is written
+    * banded ONCE, at append:
+    *
+    *   `storePath/batch=<id>/band=<b>/kp=<p>/…`  rows (id, h|code, key)
+    *
+    * with kp = the band key's top [[HammingStorePrefixBits]] bits and
+    * files SORTED by key. A batch then probes only what it can hit —
+    * three nested prune layers, the IVF posture carried to Hamming
+    * space:
+    *  1. (band, kp) partition pruning from the batch's driver-known
+    *     prefix set (micro-batch-bounded, ≤ bands × 2^bits values);
+    *  2. key-set parquet pushdown (`key isin batchKeys` raised past
+    *     `inFilterThreshold`): sorted files make row-group min/max
+    *     stats key-narrow after [[compactHammingStore]], so the scan
+    *     reads O(batch × row-group) bytes FLAT in store size;
+    *  3. the (band, key) equality join itself (capped buckets).
+    * Retry discipline is the [[BatchStore]] one: screen against every
+    * prior batch dir (own dir excluded → replay never self-flags), then
+    * overwrite the own dir; a replay of an id a compaction absorbed is a
+    * NO-OP. Store rows are (id, hash, key) per band, never the assets
+    * themselves. The hash column is integral (stored as `h`) or
+    * `array<bigint>` (stored as `code`). */
+  private[graft] def hammingScreenBatch(batch: DataFrame, batchId: Long,
+                                        storePath: String, flaggedPath: String,
+                                        hashCol: String, idCol: String,
+                                        bands: Int, bandBits: Int,
+                                        maxHamming: Int,
+                                        maxBucketSize: Int): Unit = {
     val spark = batch.sparkSession
     if (BatchStore.absorbed(spark, storePath, batchId))
       return // compacted away — the replay's rows are already consolidated
+    val form = hammingForm(batch, hashCol)
     val fs = BatchStore.fs(spark, storePath)
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // SIZE-GATED AQE bypass for the micro-batch's own jobs (probe
@@ -2241,18 +2188,21 @@ object Dedup {
         val tmp = new org.apache.hadoop.fs.Path(
           storePath, s"$HammingLayoutSidecar.tmp-$batchId")
         val out = fs.create(tmp, true)
-        out.write(s"bands=$bands bandBits=$bandBits\n".getBytes("UTF-8"))
-        out.close()
+        try out.write(s"bands=$bands bandBits=$bandBits\n".getBytes("UTF-8"))
+        finally out.close()
         if (!fs.rename(tmp, sidecar)) fs.delete(tmp, false) // lost race: another writer won
       }
       if (prior.nonEmpty)
-        probeWrite(b, s"$flaggedPath/batch=$batchId")
+        hammingScreenAgainstStore(b, storePath, hashCol, idCol, bands,
+          bandBits, maxHamming, maxBucketSize, excludeBatchId = batchId,
+          sink = Some(_.write.mode("overwrite")
+            .parquet(s"$flaggedPath/batch=$batchId")))
       // banded append: one key-sorted file per touched band, under the
       // constant kp = FreshKp dir (see [[FreshKp]] — real kp fan-out is
       // compaction's job; an append writing 2^HammingStorePrefixBits
       // dirs per band was the whole gate cost at micro-batch scale)
-      mkBands(b)
-        .select(col("id"), col(payloadCol), col("key"), col("band"))
+      bandRows(form, b, hashCol, idCol, bands, bandBits)
+        .select(col("id"), col(form.payload), col("key"), col("band"))
         .withColumn("kp", lit(FreshKp))
         .repartition(col("band"))
         .sortWithinPartitions("band", "key")
@@ -2260,32 +2210,6 @@ object Dedup {
         .parquet(s"$storePath/batch=$batchId")
     } finally b.unpersist()
   }
-
-  private[graft] def hammingScreenBatch(batch: DataFrame, batchId: Long,
-                                        storePath: String, flaggedPath: String,
-                                        hashCol: String, idCol: String,
-                                        bands: Int, bandBits: Int,
-                                        maxHamming: Int,
-                                        maxBucketSize: Int): Unit =
-    screenBatchCore(batch, batchId, storePath, flaggedPath, "h", bands, bandBits,
-      b => hammingBands(b, hashCol, idCol, bands, bandBits),
-      (b, path) => hammingScreenAgainstStore(b, storePath, hashCol, idCol,
-        bands, bandBits, maxHamming, maxBucketSize, excludeBatchId = batchId,
-        sink = Some(df => df.write.mode("overwrite").parquet(path))))
-
-  private[graft] def hammingScreenBatchWide(batch: DataFrame, batchId: Long,
-                                            storePath: String,
-                                            flaggedPath: String,
-                                            codeCol: String, idCol: String,
-                                            bands: Int, bandBits: Int,
-                                            words: Int, maxHamming: Int,
-                                            maxBucketSize: Int): Unit =
-    screenBatchCore(batch, batchId, storePath, flaggedPath, "code", bands, bandBits,
-      b => hammingBandsWide(b, codeCol, idCol, bands, bandBits, words),
-      (b, path) => hammingScreenAgainstStoreWide(b, storePath, codeCol, idCol,
-        bands, bandBits, words, maxHamming, maxBucketSize,
-        excludeBatchId = batchId,
-        sink = Some(df => df.write.mode("overwrite").parquet(path))))
 
   /** Compact a banded hash store: fold every committed `batch=<id>`
     * dir (prior consolidated generations included) into ONE
@@ -2311,32 +2235,41 @@ object Dedup {
   /** [[compactHammingStore]]'s layout. Fresh batch dirs carry
     * kp = [[FreshKp]]; the fold re-derives the REAL key prefix from the
     * layout sidecar so the consolidated generation gets the full
-    * (band, kp) prune fan-out. */
+    * (band, kp) prune fan-out. A store without a sidecar (written
+    * before it existed) keeps its dir-recorded kp; a sidecar without a
+    * parsable `bands=`/`bandBits=` pair fails the compaction, naming
+    * the sidecar — folding on would bake kp = [[FreshKp]] into a
+    * generation that every later batch then probe-scans. */
   private[graft] def hammingFold(spark: org.apache.spark.sql.SparkSession,
                                  storePath: String,
                                  blockBytes: Long): BatchStore.Fold = {
     val fs = BatchStore.fs(spark, storePath)
     val sidecarPath = new org.apache.hadoop.fs.Path(
       storePath, HammingLayoutSidecar)
-    val sidecarTxt: Option[String] = if (fs.exists(sidecarPath)) {
+    // (bands, bandBits) from the sidecar
+    val geometry: Option[(Int, Int)] = if (fs.exists(sidecarPath)) {
       val in = fs.open(sidecarPath)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-           finally in.close())
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+                finally in.close()
+      def field(name: String, max: Int): Int =
+        s"\\b$name=(\\d{1,9})\\b".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+          .filter(v => v >= 1 && v <= max)
+          .getOrElse(throw new IllegalArgumentException(
+            s"malformed hamming store layout sidecar $sidecarPath: no " +
+              s"$name=<1..$max> in '${txt.trim.take(200)}'"))
+      Some((field("bands", Int.MaxValue), field("bandBits", 64)))
     } else None
-    def field(name: String): Option[Int] = sidecarTxt.flatMap(t =>
-      s"$name=(\\d+)".r.findFirstMatchIn(t).map(_.group(1).toInt))
-    val sidecarBits = field("bandBits")
     // explicit partition count = the occupied-cell upper bound: the
     // keyed repartition is otherwise an ENSURE_REQUIREMENTS exchange
     // AQE coalesces to a handful of tasks, each writing dozens of
     // (band, kp) dirs sequentially — the append-side fan-out problem
     // in the maintenance pass (hash collisions double up a few cells;
     // still ~cells-way parallel vs ~1)
-    val cells = (for { b <- field("bands"); m <- sidecarBits }
-      yield b * (1 << math.min(m, HammingStorePrefixBits))).getOrElse(0)
+    val cells = geometry.fold(0) { case (bands, bits) =>
+      bands * (1 << math.min(bits, HammingStorePrefixBits)) }
     BatchStore.Fold(
-      derive = rows => sidecarBits match {
-        case Some(bits) => rows.drop("kp").withColumn("kp", kpOf(bits))
+      derive = rows => geometry match {
+        case Some((_, bits)) => rows.drop("kp").withColumn("kp", kpOf(bits))
         case None => rows // pre-sidecar store: keep dir-recorded kp
       },
       write = { (rows, stage) =>
@@ -2366,10 +2299,13 @@ object Dedup {
     * hashes: each micro-batch of (idCol, hashCol) assets is screened
     * against everything ingested before it and its hashes join the
     * store. The caller owns hashing (decode + aHash / energy-hash maps
-    * stay outside so the operator works for any ≤ 64-bit hash). The
-    * store is the BANDED layout (see [[hammingScreenBatch]]) — per-batch
-    * probe cost is partition-pruned + key-pushed, flat in store size
-    * once [[compactHammingStore]] has consolidated the generations.
+    * stay outside so the operator works for any hash); `hashCol` is
+    * integral (≤ 64 bits) or `array<bigint>` (wide codes, the 256-bit
+    * pHash class real image dedup runs), checked before the stream
+    * starts. The store is the BANDED layout (see [[hammingScreenBatch]])
+    * — per-batch probe cost is partition-pruned + key-pushed, flat in
+    * store size once [[compactHammingStore]] has consolidated the
+    * generations.
     * THE CALLER OWNS THE COMPACTION CADENCE: fresh appends land under
     * always-probed kp=[[FreshKp]] dirs, so a long-running stream that
     * never runs [[compactHammingStore]] degrades toward scanning every
@@ -2381,28 +2317,13 @@ object Dedup {
                             bands: Int = 4, bandBits: Int = 16,
                             maxHamming: Int = 2,
                             maxBucketSize: Int = DefaultMaxBucketSize)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    hammingForm(assets, hashCol) // reject a bad hash column before the stream starts
     BatchStore.stream(assets, checkpointPath, "hammingScreenedIngest") {
       (batch, batchId) => hammingScreenBatch(batch, batchId, storePath,
         flaggedPath, hashCol, idCol, bands, bandBits, maxHamming, maxBucketSize)
     }
-
-  /** [[hammingScreenedIngest]] for WIDE codes (`array<bigint>` — the
-    * 256-bit pHash class real image dedup runs): same banded store
-    * contract, [[graft.functions.GraftFunctions.hammingWords]] verify. */
-  def hammingScreenedIngestWide(assets: DataFrame, storePath: String,
-                                flaggedPath: String, checkpointPath: String,
-                                codeCol: String = "code",
-                                idCol: String = "asset_id",
-                                bands: Int = 8, bandBits: Int = 32,
-                                words: Int = 4, maxHamming: Int = 6,
-                                maxBucketSize: Int = DefaultMaxBucketSize)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    BatchStore.stream(assets, checkpointPath, "hammingScreenedIngestWide") {
-      (batch, batchId) => hammingScreenBatchWide(batch, batchId, storePath,
-        flaggedPath, codeCol, idCol, bands, bandBits, words, maxHamming,
-        maxBucketSize)
-    }
+  }
 
   /** Embedding-cosine near-dup pairs within a blocking key (e.g. a label or
     * IVF cell): equality-join on the block, codegen dot product, keep pairs

@@ -616,8 +616,8 @@ class DedupSpec extends AnyFunSuite {
       (3L, code(Seq(63, 64, 10, 30))), // + bands 0 and 1
       (4L, code(Seq(5, 26, 51, 76, 101))) // one flip in EVERY band (d=5)
     ).toDF("doc_id", "code")
-    val got = Dedup.hammingNearDupsWide(rows, "code", "doc_id", bands = 5,
-        bandBits = 25, words = 2, maxHamming = 4)
+    val got = Dedup.hammingNearDups(rows, "code", "doc_id", bands = 5,
+        bandBits = 25, maxHamming = 4)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     // brute-force truth at d <= 4 (radius = bands - 1 -> lossless)
@@ -634,9 +634,9 @@ class DedupSpec extends AnyFunSuite {
       .createTempDirectory("graft-widestore").toString
     val store = s"$dir/store"; val flagged = s"$dir/flagged"
     def run(ids: Seq[(Long, Seq[Long])], batchId: Long): Unit =
-      Dedup.hammingScreenBatchWide(ids.toDF("asset_id", "code"), batchId,
+      Dedup.hammingScreenBatch(ids.toDF("asset_id", "code"), batchId,
         store, flagged, "code", "asset_id", bands = 5, bandBits = 25,
-        words = 2, maxHamming = 4, maxBucketSize = 1000)
+        maxHamming = 4, maxBucketSize = 1000)
     run(Seq((1L, code(Nil)), (2L, code(Seq(5, 26, 51, 76, 101)))), 0L)
     run(Seq((10L, code(Seq(63))), (11L, code(Seq(0, 1, 2, 3, 4, 5)))), 1L)
     def readFlagged() =
@@ -652,6 +652,129 @@ class DedupSpec extends AnyFunSuite {
       .select("asset_id", "n_matches", "top_match_id", "hamming")
       .as[(Long, Long, Long, Long)].collect().toSet ==
       Set((20L, 2L, 1L, 1L)))
+  }
+
+  test("hamming family: one-word array<bigint> codes give the bigint column's results; a string column is rejected") {
+    // the same hashes twice — a bigint column and one-word codes — so
+    // the word-array form must band, cap, verify and store exactly as
+    // the 64-bit form does (sign bit exercised: base is negative); the
+    // 12-member pile of 42s overflows the cap of 10 in every band
+    val base = 0xF00DFACE12345678L
+    val hashes = Seq(
+      (0L, base),
+      (1L, base ^ (1L << 3)),
+      (2L, base ^ (1L << 3) ^ (1L << 20)),
+      (3L, base ^ (1L << 3) ^ (1L << 20) ^ (1L << 62)),
+      (4L, ~base)) ++ (0 until 12).map(i => (100L + i, 42L))
+    val probe = Seq((10L, base ^ 1L), (11L, base ^ (1L << 3) ^ 6L),
+      (12L, ~base ^ 1L), (13L, 42L))
+    def bigints(rows: Seq[(Long, Long)]) = rows.toDF("doc_id", "hh")
+    def words(rows: Seq[(Long, Long)]) =
+      rows.map { case (id, h) => (id, Seq(h)) }.toDF("doc_id", "hh")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.hammingNearDups(df, "hh", "doc_id", bands = 4, bandBits = 16,
+          maxHamming = 3, maxBucketSize = 10)
+        .select("id_a", "id_b", "hamming").as[(Long, Long, Long)].collect().toSet
+    assert(pairs(bigints(hashes)).size == 6)
+    assert(pairs(words(hashes)) == pairs(bigints(hashes)))
+    def dropped(df: org.apache.spark.sql.DataFrame) =
+      Dedup.hammingDroppedBuckets(df, "hh", "doc_id", bands = 4,
+          bandBits = 16, maxBucketSize = 10)
+        .select("band", "key", "n_members").as[(Int, Long, Long)].collect().toSet
+    assert(dropped(bigints(hashes)).size == 4)
+    assert(dropped(words(hashes)) == dropped(bigints(hashes)))
+    def screened(mk: Seq[(Long, Long)] => org.apache.spark.sql.DataFrame) =
+      Dedup.hammingScreenAgainst(mk(probe), mk(hashes), "hh", "doc_id",
+          bands = 4, bandBits = 16, maxHamming = 2, maxBucketSize = 10)
+        .select("doc_id", "n_matches", "top_match_id", "hamming")
+        .as[(Long, Long, Long, Long)].collect().toSet
+    assert(screened(bigints) == Set((10L, 2L, 0L, 1L), (11L, 1L, 1L, 2L),
+      (12L, 1L, 4L, 1L)))
+    assert(screened(words) == screened(bigints))
+    // two-batch store round trip per form: batch 0 ingests, batch 1
+    // is screened against it; the store keeps its payload column name
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-hamforms").toString
+    def flaggedVia(form: String, mk: Seq[(Long, Long)] => org.apache.spark.sql.DataFrame) = {
+      val store = s"$dir/$form/store"; val flagged = s"$dir/$form/flagged"
+      for ((rows, id) <- Seq(hashes -> 0L, probe -> 1L))
+        Dedup.hammingScreenBatch(mk(rows), id, store, flagged, "hh",
+          "doc_id", bands = 4, bandBits = 16, maxHamming = 2,
+          maxBucketSize = 10)
+      val cols = spark.read.parquet(store).columns.toSet
+      val report = spark.read.parquet(s"$flagged/batch=1")
+        .select("doc_id", "n_matches", "top_match_id", "hamming")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      (cols, report)
+    }
+    val ((narrowCols, narrowReport), (wideCols, wideReport)) =
+      try (flaggedVia("h", bigints), flaggedVia("code", words))
+      finally SparkEntry.rmTree(dir)
+    assert(narrowCols == Set("id", "h", "key", "batch", "band", "kp"))
+    assert(wideCols == Set("id", "code", "key", "batch", "band", "kp"))
+    assert(narrowReport == screened(bigints))
+    assert(wideReport == narrowReport)
+    // any other hash type is rejected, the column named
+    val e = intercept[IllegalArgumentException](Dedup.hammingNearDups(
+      Seq((1L, "f00d")).toDF("doc_id", "hs"), "hs", "doc_id"))
+    assert(e.getMessage.contains("'hs'"), e.getMessage)
+  }
+
+  test("compactHammingStore fails on a layout sidecar without bands/bandBits, naming it") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-hamlayout").toString
+    try {
+      val store = s"$dir/store"
+      for (id <- 0L to 1L)
+        Dedup.hammingScreenBatch(Seq((id, 0x1234L << id)).toDF("asset_id", "h"),
+          id, store, s"$dir/flagged", "h", "asset_id", bands = 4,
+          bandBits = 16, maxHamming = 2, maxBucketSize = 1000)
+      // rewritten through the Hadoop FS so its checksum file follows
+      val sidecar = new org.apache.hadoop.fs.Path(store, Dedup.HammingLayoutSidecar)
+      val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(sidecar)
+      assert((try new String(in.readAllBytes(), "UTF-8") finally in.close()) ==
+        "bands=4 bandBits=16\n")
+      val out = fs.create(sidecar, true)
+      try out.write("bands=4 bandBits=\n".getBytes("UTF-8")) finally out.close()
+      val e = intercept[IllegalArgumentException](
+        Dedup.compactHammingStore(spark, store, keepNewest = 0))
+      assert(e.getMessage.contains(s"$store/${Dedup.HammingLayoutSidecar}") &&
+        e.getMessage.contains("bandBits"), e.getMessage)
+      // nothing was folded: both batch dirs are still there
+      assert(new java.io.File(store).listFiles().map(_.getName)
+        .filter(_.startsWith("batch=")).sorted.toSeq == Seq("batch=0", "batch=1"))
+    } finally SparkEntry.rmTree(dir)
+  }
+
+  test("array-form verifies give the same pairs with the shingle-array broadcast gate shut") {
+    val host = (1 to 40).map(i => s"h$i").mkString(" ")
+    val docs = Seq(
+      (1L, host),
+      (2L, (10 to 14).map(i => s"h$i").mkString(" ")), // excerpt of 1
+      (3L, (1 to 40).map(i => s"x$i").mkString(" ")),  // disjoint
+      (4L, host + " tail1 tail2"),                     // near-dup of 1
+      (5L, "a b c d e f g h i j"),
+      (6L, "a b c d e f g h i k")                      // near-dup of 5
+    ).toDF("doc_id", "text")
+    def pairsAndPlans() = {
+      val jac = Dedup.prefixJaccardPairs(docs, "text", "doc_id", n = 3)
+      val cont = Dedup.containmentPairsLossless(docs, "text", "doc_id",
+        n = 3, invTheta = 4)
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      ((ids(jac), ids(cont)),
+        Seq(jac, cont).map(_.queryExecution.executedPlan.toString))
+    }
+    val (open, openPlans) = pairsAndPlans()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1") // gate shut: the shuffle-join fallback
+    val (shut, shutPlans) = try pairsAndPlans() finally spark.conf.set(key, prev)
+    assert(open._1.contains((5L, 6L)) && open._2.contains((1L, 2L)), s"$open")
+    assert(shut == open)
+    assert(openPlans.forall(_.contains("BroadcastExchange")), openPlans.mkString("\n"))
+    assert(!shutPlans.exists(_.contains("BroadcastExchange")), shutPlans.mkString("\n"))
   }
 
   test("text signature store: sorted batch dirs, sig-set pushdown prunes the probe scan") {
